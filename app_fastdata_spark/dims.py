@@ -2,17 +2,21 @@
 
 The reference keeps small dims (`dests`, `agents`, `clusters`) as
 replicated tables joined on every ingest (db/ddl.sql:3-59,
-client LogGenerator.java:98-124). Here they are fixed Python literals so
-the Spark side and the DuckDB oracle SQL are generated from the SAME
-source of truth (FIXTURES.md §3: dims are inlined, no files).
+client LogGenerator.java:98-124). Here `dests` and `clusters` are fixed
+Python literals so the Spark side and the DuckDB oracle SQL are
+generated from the SAME source of truth (FIXTURES.md §3: dims are
+inlined, no files); no query reads `agents`.
 
-Spark-scale note: these are dim-sized (≤100 rows) and every join against
-them goes through `F.broadcast` — no shuffle at any data scale.
+Spark-scale note: these are dim-sized (≤100 rows), so no query joins
+them. A lookup is a projection over the literals — `lookup_dests`
+here, `enrich.with_cluster` for the clusters — with no broadcast, no
+shuffle and no extra Spark job at any data scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 # --- dests dim (reference db/ddl.sql:45-51; event_type plays `url`) -------
 # id assignment = alphabetical order of the 5 event types, sentinel row for
@@ -21,9 +25,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 DESTS: list[tuple[int, str, str]] = [
     (i, et, f"http://example.com/{et}") for i, et in enumerate(EVENT_TYPES)
 ] + [(len(EVENT_TYPES), "", "")]  # sentinel: no-referral row
-
-# --- agents dim (reference db/ddl.sql:53-59) ------------------------------
-AGENTS: list[tuple[int, str]] = [(i, f"agent/{i}.0 (synthetic)") for i in range(75)]
 
 # --- clusters model table (reference db/ddl.sql:3-11) ---------------------
 # k=20 centers over the 2-d feature space (user_id mod 100, value) — the
@@ -34,33 +35,38 @@ CLUSTERS: list[tuple[int, float, float]] = [
 ]
 
 
-# Arrow-backed literal frames (r13): createDataFrame over a plain list
-# parallelizes PICKLED rows into defaultParallelism slices, so every
-# consumption — including each broadcast build these dims exist for —
-# round-trips a Python worker per slice (~32 near-idle tasks for a
-# 6-row dim, stage-profiled). A pandas source goes through Arrow: the
-# batches live in the JVM and reads never touch Python.
-def _lit_df(spark: SparkSession, rows: list, cols: list, schema: str):
-    import pandas as pd
+def lookup_dests(
+    df: DataFrame,
+    key: str | Column,
+    *,
+    id_as: str | None = None,
+    url_as: str | None = None,
+    sentinel: bool = True,
+) -> DataFrame:
+    """``df`` inner-joined to the dests dim on ``event_type = key``, as a
+    filter and a projection — the J3 lookup in the shape `with_cluster`
+    gives J4. An ``IN`` over the dim's keys drops the rows the join would
+    drop (Spark pushes it to the parquet scan when ``key`` is a scan
+    column), and the dim's ``id`` and ``url`` are appended as ``id_as``
+    and ``url_as`` by a CASE over DESTS. The keys are unique, so every
+    kept row matches exactly one dim row and the result equals the join:
+    no broadcast build (a Spark job on every execution), no join node.
+    ``sentinel=False`` leaves the no-referral row (url '') out of the
+    dim."""
+    rows = [r for r in DESTS if sentinel or r[2]]
+    keys = [et for _, et, _ in rows]
+    if len(set(keys)) != len(keys):
+        raise ValueError(f"dests keys are not unique: {keys}")
+    k = F.col(key) if isinstance(key, str) else key
 
-    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
+    def case(field: int) -> Column:
+        expr = F.when(k == rows[0][1], F.lit(rows[0][field]))
+        for r in rows[1:]:
+            expr = expr.when(k == r[1], F.lit(r[field]))
+        return expr
 
-
-def dests_df(spark: SparkSession) -> DataFrame:
-    return _lit_df(
-        spark, DESTS, ["id", "event_type", "url"],
-        "id int, event_type string, url string",
-    )
-
-
-def agents_df(spark: SparkSession) -> DataFrame:
-    return _lit_df(spark, AGENTS, ["id", "name"], "id int, name string")
-
-
-def clusters_df(spark: SparkSession) -> DataFrame:
-    return _lit_df(
-        spark, CLUSTERS, ["id", "cu", "cv"], "id int, cu double, cv double"
-    )
+    out = {name: case(field) for name, field in ((id_as, 0), (url_as, 2)) if name}
+    return df.filter(k.isin(keys)).withColumns(out)
 
 
 # --- DuckDB oracle fragments (same literals, rendered as VALUES CTEs) -----

@@ -1,8 +1,9 @@
 """Ingest-path enrichment (SURVEY.md §3.1 steps 4-5).
 
 J3 — per-event dim-id resolution (NewEvent.java:53-60): a point lookup per
-event in the reference becomes a broadcast equi-join here (the idiomatic
-Spark form — no per-row lookups, no shuffle for dim-sized tables).
+event in the reference becomes a filter plus a CASE projection over the
+literal dests dim here (`dims.lookup_dests`) — no join, no broadcast
+build, no shuffle at any event count.
 
 J4 — nearest-centroid scoring (NewEvent.java:29-30, 62-69): the reference
 runs an argmin-over-cross-join per event. With k=20 dim-sized centers the
@@ -18,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dims import CLUSTERS, clusters_values_sql, dests_df, dests_values_sql
+from ..dims import CLUSTERS, clusters_values_sql, dests_values_sql, lookup_dests
 from ..cache import memoized_build
 from ..registry import register
 from ..tables import load_table
@@ -176,25 +177,19 @@ register(
 )(events_by_cluster)
 
 
-# J3 — dim-id resolution: stream-static broadcast join resolving
-# event_type → dest id/url (stand-in for url→id, referral→id, agent→id;
-# NewEvent.java:53-60). The no-referral sentinel (empty url, max id)
-# follows LogGenerator.java:105-110: odd event_ids take the sentinel.
+# J3 — dim-id resolution: two dests lookups resolving event_type → dest
+# id/url and the referral key → referral id (stand-in for url→id,
+# referral→id, agent→id; NewEvent.java:53-60). The no-referral sentinel
+# (empty url, max id) follows LogGenerator.java:105-110: odd event_ids
+# take the sentinel.
 def enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    dests = dests_df(spark)
     referral_key = F.when(F.col("event_id") % 2 == 1, F.lit("")).otherwise(
         F.col("event_type")
     )
-    ev = ev.withColumn("referral_key", referral_key)
-    ref_dim = dests.select(
-        F.col("event_type").alias("referral_key"), F.col("id").alias("referral")
-    )
-    return (
-        ev.join(F.broadcast(dests.select("event_type", F.col("id").alias("dest"), "url")),
-                "event_type")
-        .join(F.broadcast(ref_dim), "referral_key")
-        .select("event_id", "dest", "url", "referral")
+    ev = lookup_dests(ev, "event_type", id_as="dest", url_as="url")
+    return lookup_dests(ev, referral_key, id_as="referral").select(
+        "event_id", "dest", "url", "referral"
     )
 
 

@@ -124,8 +124,9 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         (band_id, lo, hi, list(range(int(lo // BUCKET_W), int((hi - 1e-9) // BUCKET_W) + 1)))
         for band_id, lo, hi in PRICE_BANDS
     ]
-    # Arrow-backed literal frame (see dims._lit_df): the pickled-list
-    # path paid a Python worker per slice on every broadcast build
+    # Arrow-backed literal frame: a createDataFrame over a plain list
+    # parallelizes pickled rows, and every broadcast build then paid a
+    # Python worker per slice
     import pandas as pd
 
     bands = spark.createDataFrame(
@@ -224,7 +225,7 @@ register(
 # are all clean — the corruption rule lives in the query on BOTH engines.
 @memoized_build("events")
 def events_fuzzy_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..dims import EVENT_TYPES, dests_df
+    from ..dims import EVENT_TYPES, lookup_dests
 
     ev = load_table(spark, sf_dir, "events")
     raw = F.when(
@@ -240,21 +241,13 @@ def events_fuzzy_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     best = F.array_min(cands)
-    dests = dests_df(spark).filter(F.col("url") != "")
-    return (
-        ev.select("event_id", raw.alias("raw_type"))
-        .select(
-            "event_id",
-            "raw_type",
-            best["lev"].alias("edit_distance"),
-            best["t"].alias("resolved_type"),
-        )
-        .join(
-            F.broadcast(dests.select(F.col("event_type").alias("resolved_type"), "url")),
-            "resolved_type",
-        )
-        .select("event_id", "raw_type", "resolved_type", "edit_distance", "url")
+    matched = ev.select("event_id", raw.alias("raw_type")).select(
+        "event_id",
+        "raw_type",
+        best["t"].alias("resolved_type"),
+        best["lev"].alias("edit_distance"),
     )
+    return lookup_dests(matched, "resolved_type", url_as="url", sentinel=False)
 
 
 def _register_fuzzy() -> None:

@@ -9,7 +9,12 @@ stable (T2 note).
 Scale notes: the serving reads re-aggregate the per-second partials
 (A4/A5/A6 views) — two-tier partial→final aggregation, exactly Spark's
 hash-agg shape; top-k compiles to TakeOrderedAndProject (no global sort).
-Dim joins broadcast.
+No dim is joined: the dests lookup is a filter plus a CASE projection
+(`dims.lookup_dests`), the clusters lookup a scoring projection
+(`enrich.with_cluster`). When the events listing packs into one split,
+the scan is declared single-partition (`tables.narrow_single_split_scan`),
+so each read runs as ONE Spark job with no exchange; more splits keep
+the two-tier hash-agg plan.
 """
 
 from __future__ import annotations
@@ -17,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dims import clusters_values_sql, dests_df, dests_values_sql
+from ..dims import clusters_values_sql, dests_values_sql, lookup_dests
 from ..params import AS_OF, TOP_K, WINDOW_SECONDS
 from ..cache import memoized_build
 from ..registry import register
@@ -62,14 +67,15 @@ def events_in_window(
     date_trunc(s, ts) >= cutoff ⟺ ts >= cutoff."""
     from datetime import datetime, timezone
 
-    from ..tables import load_table
+    from ..tables import load_table, narrow_single_split_scan
 
     dt = datetime.strptime(as_of, "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc)
     cutoff_s = int(dt.timestamp()) - window
-    return load_table(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         (F.col("ts_ns") >= cutoff_s * 1_000_000_000)
         & (F.col("ts") >= F.timestamp_seconds(F.lit(cutoff_s)))
     )
+    return narrow_single_split_scan(ev, f"{sf_dir}/events.parquet")
 
 
 # GetTopUsers (GetTopUsers.java:25-38): recency filter over events_by_second,
@@ -130,18 +136,17 @@ register(
 )(top_sources)
 
 
-# GetTopSrcDests (GetTopSrcDests.java:25-35): J1 view ⋈ broadcast dim + T3.
+# GetTopSrcDests (GetTopSrcDests.java:25-35): J1 view ⋈ dim + T3. The dim
+# lookup maps dest to url after the aggregate; its IN on dest reaches the
+# scan.
 @memoized_build("events")
 def top_src_dests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dests = dests_df(spark).filter(F.col("url") != "")
     return (
-        events_by_src_dest(spark, sf_dir)
-        .join(F.broadcast(dests), F.col("dest") == dests.event_type)
-        .select(
-            F.col("src").alias("sources"),
-            F.col("url").alias("destination"),
-            "counts",
+        lookup_dests(
+            events_by_src_dest(spark, sf_dir), "dest",
+            url_as="destination", sentinel=False,
         )
+        .select(F.col("src").alias("sources"), "destination", "counts")
         .orderBy(F.desc("counts"), F.asc("sources"), F.asc("destination"))
         .limit(TOP_K)
     )
@@ -161,23 +166,18 @@ register(
 )(top_src_dests)
 
 
-# GetTopDests (db/ddl.sql:161-166): P6 + J2 broadcast join + A8 re-agg + T2.
-# Single-tier: one full-size agg by dest over the pruned window (the
-# per-second tier is the maintained view's artifact — see top_users),
-# broadcast-join the 150-row result to the dim, then the A8 re-agg by
-# url runs over dim-sized rows (two event types may share a url).
+# GetTopDests (db/ddl.sql:161-166): P6 + J2 dim lookup + A8 re-agg + T2.
+# Single-tier: the lookup maps each pruned-window event to its url
+# BEFORE one agg by url (the per-second and per-dest tiers collapse —
+# see top_users; two event types may share a url, so the agg is by url).
 @memoized_build("events")
 def top_dests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dests = dests_df(spark).filter(F.col("url") != "")
-    by_dest = (
-        events_in_window(spark, sf_dir)
-        .groupBy(F.col("event_type").alias("dest"))
-        .agg(F.count("*").alias("count_values"))
-    )
     return (
-        by_dest.join(F.broadcast(dests), F.col("dest") == dests.event_type)
+        lookup_dests(
+            events_in_window(spark, sf_dir), "event_type", url_as="url", sentinel=False
+        )
         .groupBy("url")
-        .agg(F.sum("count_values").alias("counts"))
+        .agg(F.count("*").alias("counts"))
         .orderBy(F.desc("counts"), F.asc("url"))
         .limit(TOP_K)
     )

@@ -19,11 +19,13 @@ from pyspark.sql import functions as F
 
 from ..cache import memoized_build
 from ..registry import register
-from ..tables import load_table
+from ..tables import load_table, narrow_single_split_scan
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
+    return narrow_single_split_scan(
+        load_table(spark, sf_dir, "events"), f"{sf_dir}/events.parquet"
+    )
 
 
 # A1 — events_by_src_view (db/ddl.sql:92-95): count by src over the stream.

@@ -7,9 +7,9 @@ running aggregates → export session-starts. Here that is ONE streaming
 DataFrame fanned out to multiple sinks/aggregations:
 
   * `events_stream`        — file (or rate) source, S1/S11
-  * `enriched_stream`      — stream-static broadcast joins + centroid
-                             scoring (ST6; same builders as batch, so
-                             batch/stream parity is by construction)
+  * `enriched_stream`      — centroid scoring projection (ST6; same
+                             builders as batch, so batch/stream parity
+                             is by construction)
   * `per_second_counts`    — A4 view as a watermarked windowed agg (ST3),
                              watermark doubling as retention (ST5)
   * `running_counts_by_src`— A1 view, update-mode keyed state
@@ -17,8 +17,9 @@ DataFrame fanned out to multiple sinks/aggregations:
                              session_window, emitting per-session start
                              rows (the events_export contents)
 
-Scale notes: stream-static joins re-resolve the broadcast dim per
-micro-batch (hot model swap ST7 picked up automatically); windowed aggs
+Scale notes: dim lookups are projections over literals, so a
+micro-batch runs no dim job (a hot model swap, ST7, re-reads the centers
+per micro-batch in foreachBatch); windowed aggs
 keep state bounded by the watermark; session_window state is bounded by
 gap + watermark. No Python in any hot path.
 """
@@ -280,18 +281,18 @@ def events_by_cluster_stream(events: DataFrame, retention: str = RETENTION) -> D
 
 def full_ingest_stream(spark: SparkSession, events: DataFrame) -> DataFrame:
     """ST6 complete: the NewEvent hot loop as ONE streaming projection —
-    stream-static broadcast dim joins (J3) + inline centroid scoring (J4)
-    on every arriving event (NewEvent.java:50-78). The dim frames are
-    re-resolved per micro-batch, so a dim table swap is visible without
-    restarting the query."""
-    from ..dims import dests_df
+    the dests lookup (J3) + inline centroid scoring (J4) on every
+    arriving event (NewEvent.java:50-78). Both dims are literals
+    captured when the query is defined: a micro-batch runs no dim job,
+    and a dim change takes effect on a restart of the query. Columns
+    are event_type, the other events columns, dest, url and cluster —
+    the order of a join on event_type."""
+    from ..dims import lookup_dests
 
-    dests = dests_df(spark)
+    rest = [c for c in events.columns if c != "event_type"]
     return (
-        events.join(
-            F.broadcast(dests.select("event_type", F.col("id").alias("dest"), "url")),
-            "event_type",
-        )
+        lookup_dests(events, "event_type", id_as="dest", url_as="url")
+        .select("event_type", *rest, "dest", "url")
         .transform(with_cluster)
     )
 

@@ -312,7 +312,7 @@ def measure_freshness_lag(
     aggregates (demo.js:3-22, voltdb-dashboard.js:50-53); ingest
     throughput and serving-read latency were both measured but nothing
     measured the lag BETWEEN them. This drives the complete path —
-    rate source → full_ingest_stream (dim joins + centroid scoring) →
+    rate source → full_ingest_stream (dim lookup + centroid scoring) →
     per-second aggregate → foreachBatch parquet upsert → readable
     store scan — polling the store like a dashboard does and recording,
     at every successful poll, the store's STALENESS: wall-clock now

@@ -343,10 +343,12 @@ def _est_scan_partitions(
     open_cost_conf: int = _SCAN_OPEN_COST,
 ) -> int:
     """Estimate of the scan partition count Spark will produce for
-    `path`, from the file listing alone (mirrors FilePartition packing:
+    `path`, from the file listing alone. Mirrors FilePartition packing:
     maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    total/parallelism)), splits bin-packed to maxSplitBytes). `stamp`
-    keys the cache so an in-place rewrite re-derives."""
+    Σ(size + openCost) / parallelism)); each file is cut into
+    maxSplitBytes pieces, and the pieces, largest first, are bin-packed
+    with openCost counted after each one. `stamp` keys the cache so an
+    in-place rewrite re-derives."""
     import os as _os
 
     if _os.path.isdir(path):
@@ -355,18 +357,27 @@ def _est_scan_partitions(
         files = [path]
     else:
         files = []
-    total = 0
+    sizes = []
     for p in files:
         try:
-            total += _os.stat(p).st_size + open_cost_conf
+            sizes.append(_os.stat(p).st_size)
         except OSError:
             continue
-    if total == 0:
-        return 1
-    max_split = min(
-        max_split_conf, max(open_cost_conf, total // max(parallelism, 1))
+    total = sum(size + open_cost_conf for size in sizes)
+    max_split = max(
+        1,
+        min(max_split_conf, max(open_cost_conf, total // max(parallelism, 1))),
     )
-    return max(1, -(-total // max_split))
+    pieces = sorted(
+        (min(max_split, size - off) for size in sizes for off in range(0, size, max_split)),
+        reverse=True,
+    )
+    closed, packed = 0, 0
+    for length in pieces:
+        if packed and packed + length > max_split:
+            closed, packed = closed + 1, 0
+        packed += length + open_cost_conf
+    return closed + 1
 
 
 _WIDEN_BYTES_PER_PART = 128 * 1024
@@ -443,6 +454,34 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
+def _scan_estimate(df: DataFrame, path: str) -> int:
+    """`_est_scan_partitions` for `path` under df's session confs."""
+    spark = df.sparkSession
+    max_split, open_cost = _scan_packing_confs(spark)
+    return _est_scan_partitions(
+        path, file_stamp(path), spark.sparkContext.defaultParallelism,
+        max_split, open_cost,
+    )
+
+
+def narrow_single_split_scan(df: DataFrame, path: str) -> DataFrame:
+    """The mirror of `widen_small_scan`: ``df.coalesce(1)`` when the
+    listing of `path` (the parquet file/dir backing df's scan) packs
+    into ONE split, otherwise df unchanged.
+
+    A file scan reports its partitioning as unknown even when it reads
+    one split, so every aggregate above it plans a hash exchange: a
+    shuffle-map job, and an AQE re-plan, to regroup rows that already
+    sit in a single task. Coalescing one partition into one moves no
+    data and declares SinglePartition, which satisfies every required
+    distribution, so the aggregates and a top-k run inside the scan's
+    task as one job. An input with more splits keeps its plan: there
+    the exchange is where the parallelism comes from. The guard reads
+    the cached listing estimate only — building a plan on it runs no
+    Spark job."""
+    return df.coalesce(1) if _scan_estimate(df, path) == 1 else df
+
+
 def widen_small_scan(df: DataFrame, path: str | None = None) -> DataFrame:
     """Re-split a scan whose file layout gives fewer partitions than the
     cluster has slots (the tiny-testdata artifact: one 600 KB parquet →
@@ -458,15 +497,8 @@ def widen_small_scan(df: DataFrame, path: str | None = None) -> DataFrame:
     back to df.rdd.getNumPartitions(), which forces a physical-plan
     translation per call — measurable planning cost on hot paths, and
     pure waste at real scale where the guard is false."""
-    sc = df.sparkSession.sparkContext
-    slots = sc.defaultParallelism
-    if path is not None:
-        max_split, open_cost = _scan_packing_confs(df.sparkSession)
-        n = _est_scan_partitions(
-            path, file_stamp(path), slots, max_split, open_cost
-        )
-    else:
-        n = df.rdd.getNumPartitions()
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    n = _scan_estimate(df, path) if path is not None else df.rdd.getNumPartitions()
     if n * 2 <= slots:
         # Size the re-split from the INPUT BYTES, not the slot count
         # (guide §2: make partitioning scale-adaptive, not a constant

@@ -422,7 +422,7 @@ def main() -> None:
     dcc_bad = int(row["bad"] or 0) + abs(chain_nodes - int(row["n"]))
     # Ingest throughput as a measured NUMBER (BASELINE.md run.sh:159
     # target: ≥20k events/s): rate source at 50k rows/s through
-    # full_ingest_stream (broadcast dim resolution + inline centroid
+    # full_ingest_stream (literal dim lookup + inline centroid
     # scoring — the complete NewEvent hot loop) into a noop sink;
     # record the MEDIAN steady-state processedRowsPerSecond (the
     # sustained number — a single-batch peak can certify a target the

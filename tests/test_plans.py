@@ -40,9 +40,17 @@ def test_recency_filter_reaches_scan(spark, sf_dir, name):
     ), scans
 
 
-@pytest.mark.parametrize(
-    "name", ["top_dests", "top_src_dests", "tpch_q3_top_orders", "tpch_q5_region_revenue"]
-)
+@pytest.mark.parametrize("name", ["top_dests", "top_src_dests", "enrich_events"])
+def test_dests_lookup_is_a_projection(spark, sf_dir, name):
+    """The dests dim is looked up as a filter plus a CASE projection over
+    its literal rows (dims.lookup_dests): no join of any kind, and no
+    broadcast build — a broadcast is a Spark job on every execution."""
+    plan = plan_of(spark, sf_dir, name)
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
+@pytest.mark.parametrize("name", ["tpch_q3_top_orders", "tpch_q5_region_revenue"])
 def test_dim_joins_broadcast(spark, sf_dir, name):
     plan = plan_of(spark, sf_dir, name)
     assert "BroadcastHashJoin" in plan, plan
@@ -423,13 +431,13 @@ def test_bm25_filters_terms_before_agg_and_heap_topk(spark, sf_dir):
     assert plan.count("FileScan parquet") <= 3, plan
 
 
-def test_fuzzy_enrich_is_projection_plus_dim_broadcast(spark, sf_dir):
+def test_fuzzy_enrich_is_one_projection(spark, sf_dir):
     """Fuzzy dim resolution must be the J4 idiom: the levenshtein argmin
-    is a literal-array projection (no join, no shuffle for the match),
-    with only the url lookup as a broadcast dim join."""
+    is a literal-array projection, and the url lookup a literal CASE —
+    no join, no broadcast, no shuffle, no Python."""
     plan = plan_of(spark, sf_dir, "events_fuzzy_enrich")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan  # no BroadcastExchange either
     assert "EvalPython" not in plan, plan
 
 
@@ -457,6 +465,64 @@ def test_scan_partition_estimate_honors_session_confs(tmp_path):
     # 1 MiB max split, zero open cost → ~8 splits
     n_small = _est_scan_partitions(str(f), stamp, 1, 1 << 20, 0)
     assert n_small >= 8 > n_default
+    # one file under maxSplitBytes is one split: Spark counts the open
+    # cost after each packed piece, so it never splits a lone small file
+    g = tmp_path / "small.parquet"
+    g.write_bytes(b"\0" * (2 * 1024 * 1024))
+    for parallelism in (1, 4, 32):
+        assert _est_scan_partitions(str(g), stamp, parallelism) == 1
+
+
+DASHBOARD = ["top_users", "top_sources", "top_src_dests", "top_dests", "events_by_cluster_window"]
+
+
+@pytest.fixture(scope="module")
+def multi_split_sf_dir(tmp_path_factory, sf_dir):
+    """The test sf_dir's events rewritten as two part files — a layout
+    Spark reads as two or more splits."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("multi_split")
+    (d / "events.parquet").mkdir()
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), str(d / "events.parquet" / "part-0.parquet"))
+    pq.write_table(t.slice(half), str(d / "events.parquet" / "part-1.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("name", DASHBOARD)
+def test_dashboard_read_is_one_job_on_a_single_split(spark, sf_dir, multi_split_sf_dir, name):
+    """Over an events listing that packs into one split, a dashboard read
+    runs its aggregates and top-k inside the scan's task: no exchange,
+    exactly one Spark job per call. Over more splits the two-tier hash
+    aggregate keeps its exchange. Both layouts return the same rows."""
+    from app_fastdata_spark.tables import load_table
+
+    assert load_table(spark, sf_dir, "events").rdd.getNumPartitions() == 1
+    assert load_table(spark, multi_split_sf_dir, "events").rdd.getNumPartitions() >= 2
+    q = queries()[name]
+    rows = q(spark, sf_dir).collect()
+    assert rows and rows == q(spark, multi_split_sf_dir).collect()
+
+    assert "Exchange" not in plan_of(spark, sf_dir, name)
+    assert "Exchange hashpartitioning" in plan_of(spark, multi_split_sf_dir, name)
+
+    sc = spark.sparkContext
+
+    def jobs(group):
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for call in range(2):
+        group = f"one-job-{name}-{call}"
+        sc.setJobGroup(group, name)
+        try:
+            q(spark, sf_dir).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert jobs(group) == 1
 
 
 def test_zorder_layout_prunes_partitions(spark, sf_dir, tmp_path):
