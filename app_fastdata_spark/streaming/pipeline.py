@@ -880,16 +880,14 @@ def graph_search_stream(
     the previously resolved version (retained by the publisher's
     version-keep window) and re-probes next batch."""
     from ..operators.similarity import (
+        corpus_frame,
         graph_walk_frame,
         knn_edges,
-        load_vectors,
-        norm,
-        vec_nonzero,
-        vec_valid,
+        query_frame,
     )
     from ..tables import file_stamp
 
-    model: dict = {"stamp": None, "heads": []}
+    model: dict = {"stamp": None}
 
     def _resolve() -> None:
         if edges_path is not None:
@@ -908,15 +906,8 @@ def graph_search_stream(
             stamp = file_stamp(f"{sf_dir}/embeddings.parquet")
         if model["stamp"] == stamp:
             return
-        emb = load_vectors(spark, sf_dir, nonzero=True)
-        en = emb.select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-        )
-        model["en"] = en
-        model["heads"] = [
-            r[0]
-            for r in en.select("vec_id").orderBy("vec_id").limit(2).collect()
-        ]
+        model["en"] = corpus_frame(spark, sf_dir)
+        model["nodes"] = model["en"].limit(2).count()
         if vdir is not None:
             model["edges"] = spark.read.schema(
                 "vec_id long, rank int, neighbor_id long, cos double"
@@ -937,17 +928,11 @@ def graph_search_stream(
         # exactly-once per batch.
         for attempt in (0, 1):
             _resolve()
-            if len(model["heads"]) < 2:
+            if model["nodes"] < 2:
                 return  # <2 graph nodes: no walk (batch-twin contract)
-            q = batch.filter(vec_valid() & vec_nonzero()).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-                norm(F.col("embedding")).alias("qn"),
-            )
             try:
                 graph_walk_frame(
-                    q, model["edges"], model["en"], model["heads"][0],
-                    model["heads"][1],
+                    query_frame(batch), model["edges"], model["en"]
                 ).write.mode("append").parquet(output_path)
                 return
             except Exception:
@@ -973,58 +958,34 @@ def beam_search_stream(
     available_now: bool = True,
 ):
     """The DEPLOYABLE serving configuration at ingest: each arriving
-    vector batch runs the identical factored BEAM loop
-    (similarity.beam_frame — W-wide shared frontier over the stored
-    high-degree NN-descent graph, recall@1 1.00 at sf0.1) and appends
-    its BEAM_TOPK ranked answers to the sink. Same lifecycle as
-    graph_search_stream (stateless across batches, static stored
-    graph, per-batch edge re-resolution through the session cache's
-    stamp key); the beam loop needs the constraint-propagation toggle
-    (see beam_visited_result), applied per batch around the walk —
-    safe because foreachBatch callbacks of one query never overlap."""
+    vector batch runs sim_ann_graph_beam's configuration of the one
+    graph-search kernel (similarity.graph_search — W-wide shared
+    frontier over the stored high-degree NN-descent graph, recall@1
+    1.00 at sf0.1) and appends its BEAM_TOPK ranked answers to the
+    sink. Same lifecycle as graph_search_stream (stateless across
+    batches, static stored graph, per-batch edge re-resolution through
+    the session cache's stamp key)."""
     from ..operators.similarity import (
         BEAM_TOPK,
-        beam_conf_guard,
-        beam_frame,
+        BEAM_WIDTH,
+        corpus_frame,
+        graph_search,
         knn_edges_hd,
-        load_vectors,
-        norm,
-        vec_nonzero,
-        vec_valid,
+        query_frame,
+        top_visits,
     )
-    from pyspark.sql import Window
 
     def _beam_batch(batch: DataFrame, _epoch: int) -> None:
-        emb = load_vectors(spark, sf_dir, nonzero=True)
-        en = emb.select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-        )
         edges = knn_edges_hd(spark, sf_dir).select("vec_id", "neighbor_id")
-        q = batch.filter(vec_valid() & vec_nonzero()).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-            norm(F.col("embedding")).alias("qn"),
+        visited = graph_search(
+            query_frame(batch),
+            edges,
+            corpus_frame(spark, sf_dir),
+            BEAM_WIDTH,
+            beam=True,
         )
-        # beam_conf_guard: constraint-propagation toggle + process-wide
-        # lock (see similarity.py) over BOTH sessions — foreachBatch
-        # hands the batch a CLONED session whose conf governs
-        # batch-derived frames.
-        with beam_conf_guard(spark, batch.sparkSession):
-            visited = beam_frame(q, edges, en)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos"), F.asc("node")
-        )
-        (
-            visited.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= BEAM_TOPK)
-            .select(
-                "query_id",
-                F.col("rank").cast("int").alias("rank"),
-                F.col("node").alias("neighbor_id"),
-                "cos",
-            )
-            .write.mode("append")
-            .parquet(output_path)
+        top_visits(visited, BEAM_TOPK).write.mode("append").parquet(
+            output_path
         )
 
     writer = vectors.writeStream.foreachBatch(_beam_batch)

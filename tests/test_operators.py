@@ -2569,24 +2569,29 @@ def test_beam_search_structure_bounds_and_recall(spark, sf_dir):
 def test_walk_result_derives_from_trace_single_execution(
     spark, sf_dir, monkeypatch
 ):
-    """graph_walk_result must DERIVE from the session-materialized walk
-    trace instead of re-running the loop (the r12 review-flagged
-    redundancy): after the trace store is warm, building the terminal
-    store must not execute _walk_loop again — pinned by poisoning it —
-    and the derived terminal must equal the trace's per-query max-hop
-    row."""
+    """One single-entry walk execution per (session, stamp) must serve
+    sim_ann_graph, its recall twin AND the top-k read: from cleared walk
+    stores the three queries together run _walk_loop exactly once, and
+    the terminal sim_ann_graph serves is each query's max-hop row of
+    the stored trace."""
     from app_fastdata_spark.cache import session_clear
     from app_fastdata_spark.operators import similarity as S
 
     session_clear("graph_walk")
     session_clear("graph_walk_trace")
-    trace = S.graph_walk_trace(spark, sf_dir).collect()
+    calls = []
+    real = S._walk_loop
 
-    def poisoned(*a, **k):
-        raise AssertionError("terminal store re-ran the walk loop")
+    def counted(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
 
-    monkeypatch.setattr(S, "_walk_loop", poisoned)
-    got = {tuple(r) for r in S.graph_walk_result(spark, sf_dir).collect()}
+    monkeypatch.setattr(S, "_walk_loop", counted)
+    got = {tuple(r) for r in S.sim_ann_graph(spark, sf_dir).collect()}
+    assert S.sim_ann_graph_recall(spark, sf_dir).collect()
+    assert S.sim_ann_graph_topk(spark, sf_dir).collect()
+    trace = S._walk_store(spark, sf_dir, "graph_walk_trace").collect()
+    assert len(calls) == 1, f"{len(calls)} walk executions"
     want = set()
     by_q: dict = {}
     for r in trace:

@@ -1350,6 +1350,50 @@ def test_beam_search_stream_matches_batch(spark, sf_dir, tmp_path):
     assert g == want and g
 
 
+def test_beam_search_sets_no_session_conf(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The beam loop must not flip session-global Spark conf (a flip is
+    seen by every concurrent query of the session): building
+    sim_ann_graph_beam from a cleared beam_visited store and serving
+    one beam_search_stream batch make no RuntimeConfig.set call at all,
+    and the stream still answers exactly like the batch."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from app_fastdata_spark.cache import session_clear
+    from app_fastdata_spark.operators.similarity import (
+        N_QUERIES,
+        load_vectors,
+        sim_ann_graph_beam,
+    )
+    from app_fastdata_spark.tables import SCHEMAS
+
+    qdir = str(tmp_path / "queries")
+    load_vectors(spark, sf_dir, nonzero=True).filter(
+        F.col("vec_id") < N_QUERIES
+    ).select("vec_id", "embedding", "label").coalesce(1).write.parquet(
+        f"{qdir}/embeddings.parquet"
+    )
+    stream = spark.readStream.schema(SCHEMAS["embeddings"]).parquet(
+        f"{qdir}/embeddings.parquet"
+    )
+    sets = []
+    real = RuntimeConfig.set
+
+    def recording(self, *a, **k):
+        sets.append((a, k))
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording)
+    session_clear("beam_visited")
+    want = {tuple(r) for r in sim_ann_graph_beam(spark, sf_dir).collect()}
+    out = str(tmp_path / "beam_serve")
+    P.beam_search_stream(spark, sf_dir, stream, out).awaitTermination()
+    assert sets == []
+    got = {tuple(r) for r in spark.read.parquet(out).collect()}
+    assert got == want and got
+
+
 def test_graph_insert_stream_matches_batch_rebuild(spark, sf_dir, tmp_path):
     """Graph-index maintenance at ingest: streaming the held-out
     arrivals (vec_id % 7 == 3) into the stored base index across TWO
@@ -1466,9 +1510,6 @@ def test_graph_maintain_then_serve_closed_loop(spark, sf_dir, tmp_path):
     en = emb.select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     )
-    heads = [
-        r[0] for r in en.select("vec_id").orderBy("vec_id").limit(2).collect()
-    ]
     queries = en.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
@@ -1482,16 +1523,14 @@ def test_graph_maintain_then_serve_closed_loop(spark, sf_dir, tmp_path):
     want_base = {
         tuple(r)
         for r in graph_walk_frame(
-            queries, base_edges.select("vec_id", "neighbor_id"), en,
-            heads[0], heads[1],
+            queries, base_edges.select("vec_id", "neighbor_id"), en
         ).collect()
     }
     maintained = sim_knn_graph_incremental(spark, sf_dir)
     want_maint = {
         tuple(r)
         for r in graph_walk_frame(
-            queries, maintained.select("vec_id", "neighbor_id"), en,
-            heads[0], heads[1],
+            queries, maintained.select("vec_id", "neighbor_id"), en
         ).collect()
     }
     assert want_base != want_maint  # the swap must be observable
@@ -1645,9 +1684,6 @@ def test_graph_concurrent_maintain_and_serve_same_root(
     en = emb.select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     )
-    heads = [
-        r[0] for r in en.select("vec_id").orderBy("vec_id").limit(2).collect()
-    ]
 
     idx = str(tmp_path / "live_index")
     base_edges = inc_base_index(spark, sf_dir)[0]
@@ -1743,8 +1779,7 @@ def test_graph_concurrent_maintain_and_serve_same_root(
     want_late = {
         tuple(r)
         for r in graph_walk_frame(
-            lateq, final_edges.select("vec_id", "neighbor_id"), en,
-            heads[0], heads[1],
+            lateq, final_edges.select("vec_id", "neighbor_id"), en
         ).collect()
     }
     got_late = {t for t in got_all if t[0] >= 10}

@@ -185,8 +185,13 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
             continue
+        # the Spark-side value hash, printed so runs can be compared
+        h1 = normalize(srows, scols)
         if name not in os_:
-            print(f"rows  {name}: {len(srows)} rows (rows-only, {time.time()-t0:.1f}s)")
+            print(
+                f"rows  {name}: {len(srows)} rows (rows-only, "
+                f"{time.time()-t0:.1f}s, hash {h1[:12]})"
+            )
             n_rowsonly += 1
             continue
         try:
@@ -205,8 +210,7 @@ def main() -> int:
         if sorted(scols) != sorted(dcols):
             problems.append(f"cols spark={sorted(scols)} duckdb={sorted(dcols)}")
         if not problems:
-            h1, h2 = normalize(srows, scols), normalize(drows, dcols)
-            if h1 != h2:
+            if h1 != normalize(drows, dcols):
                 problems.append("value-hash mismatch")
                 # show first differing rows for debugging
                 s_set = {normalize([r], scols) for r in srows}
@@ -220,7 +224,8 @@ def main() -> int:
         else:
             print(
                 f"PASS  {name}: {len(srows)} rows ({time.time()-t0:.1f}s, "
-                f"rss {_rss_gib():.1f}G, oracle-peak {pk.peak:.1f}G)"
+                f"rss {_rss_gib():.1f}G, oracle-peak {pk.peak:.1f}G, "
+                f"hash {h1[:12]})"
             )
             n_pass += 1
         rss_log[name] = {
