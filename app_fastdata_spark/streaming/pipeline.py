@@ -125,16 +125,22 @@ def start_enriched_swap_stream(
     )
 
 
+def count_by_second(events: DataFrame) -> DataFrame:
+    """A4: 1-second counts by src, (second_ts, src, count_values). On a
+    static frame (a micro-batch) the counts are partial: they sum to the
+    view's totals."""
+    return (
+        events.groupBy(F.window("ts", "1 second").alias("w"), F.col("user_id").alias("src"))
+        .agg(F.count("*").alias("count_values"))
+        .select(F.col("w.start").alias("second_ts"), "src", "count_values")
+    )
+
+
 def per_second_counts(events: DataFrame, retention: str = RETENTION) -> DataFrame:
     """A4/ST3: tumbling 1-second counts by src; the watermark IS the
     retention policy (ST5 — state older than `retention` is evicted,
     matching the nibbler's historyseconds semantics)."""
-    return (
-        events.withWatermark("ts", retention)
-        .groupBy(F.window("ts", "1 second").alias("w"), F.col("user_id").alias("src"))
-        .agg(F.count("*").alias("count_values"))
-        .select(F.col("w.start").alias("second_ts"), "src", "count_values")
-    )
+    return count_by_second(events.withWatermark("ts", retention))
 
 
 def running_counts_by_src(events: DataFrame) -> DataFrame:

@@ -2,129 +2,202 @@
 reads cost O(window), not O(events)").
 
 The reference's dashboards never scan base `events` — they read
-incrementally-maintained views (demo.js:3-34). Here the A4 per-second
-aggregate streams into a day-partitioned parquet store via a foreachBatch
-upsert (read-merge-write of ONLY the partitions a micro-batch touches —
-parquet's version of a Delta MERGE), and serving queries read the store.
+incrementally-maintained views (demo.js:3-34). Here each micro-batch of
+the event stream is counted per (second, src) as a static frame, with no
+streaming state, and appended to a day-partitioned parquet store as
+PARTIAL counts. `count` is decomposable and every serving read
+re-aggregates, so the partials of a (second, src) key sum to its total.
 
-Scale notes: update-mode emits only changed (second, src) groups per
-micro-batch; the upsert rewrites only the day partitions containing those
-groups (O(recent partitions), not O(history)). Retention = dropping old
-day directories (operators/retention.drop_expired_partitions). A serving
-read is a partition-pruned scan of pre-aggregates + a tiny re-agg —
-O(window), independent of total event history.
+Layout, per day:
+
+    day=D/part-D-e<epoch>.parquet        one micro-batch's partial counts
+    day=D/part-D-c<version>-<i>.parquet  a compaction's pre-summed fold
+    day=D/_manifest/<version>.json       the day's commit log
+
+A data file is committed when a version of its day's log lists it. A
+stream commit publishes a delta naming the one file its epoch added;
+every SNAPSHOT_EVERY-th version, and every compaction, is a snapshot of
+the day's whole file set, so a commit writes one small file whatever the
+store's history, and resolving a day reads at most SNAPSHOT_EVERY
+versions (the shape of Spark's file-sink `_spark_metadata` log). A
+version becomes visible by an atomic rename, so a reader resolves the
+latest version of each day it needs and reads exactly the files listed:
+never a half-written or uncommitted file. (It scans the day directories
+filtered on file name, which carries the day and so is unique in the
+store: planning lists one directory per day, never one path per file.)
+Files are named by epoch, so a
+replayed epoch rewrites the same file and is committed once: an epoch at
+or below the day's last committed one is skipped, as the file sink skips
+a committed batch id.
+
+Manifest and staging directories are underscore-prefixed, so a raw
+`spark.read.parquet(store)` does not see them. It does see every data
+file in a day directory: the stream only adds files, so the raw read
+sums to the stored events; after a compaction it also sees the
+superseded files until their grace period ends, and only the manifest
+reader is exact.
+
+Compaction (`compact_store_partition`) is an explicit call; the stream
+never compacts. Retention = dropping old day directories, log included
+(operators/retention.drop_expired_partitions). The store is a local (or
+locally mounted POSIX) directory: commits are `os.replace` renames under
+a per-day `flock`, and one stream (one checkpoint) writes a store.
 """
 
 from __future__ import annotations
 
+import fcntl
+import json
+import os
+import shutil
+import time
+import uuid
+from contextlib import contextmanager
+
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import RETENTION, per_second_counts
+from .pipeline import RETENTION, count_by_second
+
+MANIFEST = "_manifest"
+STAGING = "_staging"
+# A day's log replays at most this many versions from its last snapshot.
+SNAPSHOT_EVERY = 32
+# Seconds a file superseded by compaction stays on disk: longer than any
+# store read, so a read planned before the compaction still finds every
+# file it listed. A later compaction of the day deletes it.
+GRACE_S = 600.0
+
+STORE_SCHEMA = T.StructType(
+    [
+        T.StructField("second_ts", T.TimestampType()),
+        T.StructField("src", T.LongType()),
+        T.StructField("count_values", T.LongType()),
+        T.StructField("day", T.DateType()),
+    ]
+)
 
 
-def _hadoop_fs(spark: SparkSession, path_str: str):
-    """(fs, Path) for any scheme (file://, hdfs://, s3a://) — local
-    os.path/glob probes silently see nothing on remote stores."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
+class _DayLog:
+    """One day's commit log, resolved at its latest version: `files` is
+    the committed file set, `superseded` the [name, unix time] of files a
+    compaction replaced and no compaction has deleted yet, `epoch` the
+    last stream epoch committed (-1: none)."""
+
+    def __init__(self, store_path: str, day: str):
+        self.dir = os.path.join(store_path, f"day={day}")
+        self.log = os.path.join(self.dir, MANIFEST)
+        try:
+            names = os.listdir(self.log)
+        except FileNotFoundError:
+            names = []
+        self.versions = sorted(
+            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
+        )
+        chain = []
+        self.base = -1  # version of the snapshot the chain starts from
+        for v in reversed(self.versions):
+            with open(self._path(v)) as f:
+                chain.append(json.load(f))
+            if "files" in chain[-1]:
+                self.base = v
+                break
+        self.files: list = []
+        self.superseded: list = []
+        self.epoch = -1
+        for entry in reversed(chain):
+            if "files" in entry:
+                self.files, self.superseded = entry["files"], entry["superseded"]
+            else:
+                self.files = self.files + entry["add"]
+            self.epoch = max(self.epoch, entry["epoch"])
+
+    def _path(self, version: int) -> str:
+        return os.path.join(self.log, f"{version:010d}.json")
+
+    @property
+    def next_version(self) -> int:
+        return self.versions[-1] + 1 if self.versions else 0
+
+    def publish(self, entry: dict) -> None:
+        """Atomically publish `entry` as the next version. A snapshot also
+        drops the versions before the previous snapshot: no new reader
+        resolves from them."""
+        path = self._path(self.next_version)
+        tmp = os.path.join(self.log, "." + os.path.basename(path))
+        with open(tmp, "w") as f:
+            json.dump(entry, f)
+        os.replace(tmp, path)
+        if "files" in entry:
+            for v in self.versions:
+                if v < self.base:
+                    os.remove(self._path(v))
+
+    def commit_epoch(self, name: str, epoch: int) -> None:
+        if self.next_version - self.base >= SNAPSHOT_EVERY:
+            self.publish(
+                {"files": self.files + [name], "superseded": self.superseded, "epoch": epoch}
+            )
+        else:
+            self.publish({"add": [name], "epoch": epoch})
 
 
-def _path_exists(spark: SparkSession, path_str: str) -> bool:
-    fs, path = _hadoop_fs(spark, path_str)
-    return fs.exists(path)
+@contextmanager
+def _locked_day_log(store_path: str, day: str):
+    """The day's log, resolved under an exclusive lock held until the
+    block ends: commits to one day are serialized across threads and
+    processes; readers take no lock."""
+    log = os.path.join(store_path, f"day={day}", MANIFEST)
+    os.makedirs(log, exist_ok=True)
+    with open(os.path.join(log, ".lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        yield _DayLog(store_path, day)
+
+
+def _parquet_files(path: str) -> list:
+    return sorted(
+        os.path.join(path, n) for n in os.listdir(path) if n.endswith(".parquet")
+    )
 
 
 def start_per_second_store(
-    events: DataFrame,
-    store_path: str,
-    retention: str = RETENTION,
-    available_now: bool = True,
+    events: DataFrame, store_path: str, available_now: bool = True
 ):
-    """Maintain the A4 view in a day-partitioned parquet store. Update-mode
-    groups upsert by (second_ts, src): existing rows for other keys in the
-    touched partitions are kept, updated keys are replaced — idempotent
-    under micro-batch replay (last write wins with the same values).
+    """Maintain the A4 view in the store as per-epoch partial counts (see
+    module note). A micro-batch runs one aggregate-and-write: its counts
+    go to a staging directory, one file per day; each file is renamed to
+    `day=D/part-D-e<epoch>.parquet` and committed to that day's log.
     available_now=False runs continuously at the demo's 1-second cadence
     (voltdb-dashboard.js:50-53) — the mode the freshness-lag probe
     measures."""
-    agg = per_second_counts(events, retention)
-    # Store read schema, derived ONCE from the same aggregation the
-    # upsert writes (day is the partition column, inferred as DATE on
-    # read — matching the empty-store materialization below). Passing it
-    # to every per-batch read removes the per-batch schema-inference
-    # footer pass (r13 verdict Next #5: foreachBatch re-plans per batch;
-    # the static side should not re-derive what never changes).
-    import pyspark.sql.types as T
 
-    store_schema = T.StructType(
-        [*agg.schema.fields, T.StructField("day", T.DateType())]
-    )
-
-    def upsert(batch: DataFrame, _epoch: int) -> None:
-        # The batch wall IS the freshness lag a dashboard sees, so the
-        # upsert body runs the batch plan exactly ONCE: foreachBatch
-        # re-executes the stateful-agg pipeline per ACTION, and the old
-        # isEmpty → distinct-days → merge sequence paid it three times
-        # (~3x the measured addBatch). Persist the (tiny, update-mode)
-        # batch, derive emptiness from the same collect that finds the
-        # touched days, and let the merge read the cached rows.
-        spark = batch.sparkSession
-        updates = batch.withColumn(
+    def write_epoch(batch: DataFrame, epoch: int) -> None:
+        staging = os.path.join(store_path, STAGING, str(epoch))
+        # coalesce(1): one file per (day, epoch); a batch's partials are
+        # O(seconds x sources), not O(events)
+        count_by_second(batch).withColumn(
             "day", F.date_format("second_ts", "yyyy-MM-dd")
-        ).persist()
-        try:
-            days = [r.day for r in updates.select("day").distinct().collect()]
-            if not days:
-                return
-            # Explicit existence probe — a broad except around the read
-            # would treat ANY transient read failure as "empty store" and
-            # silently drop the kept rows of the touched partitions.
-            # Read ONLY the touched day directories (basePath keeps the
-            # partition column): the old whole-store read + day filter
-            # paid an O(all days) listing and a schema-inference footer
-            # pass on EVERY micro-batch — per-batch driver work that
-            # grows with store age, where the merge semantics only ever
-            # need the touched partitions (r13 verdict Next #5).
-            day_dirs = [
-                d
-                for d in (f"{store_path}/day={day}" for day in days)
-                if _path_exists(spark, d)
-            ]
-            if day_dirs:
-                existing = (
-                    spark.read.schema(store_schema)
-                    .option("basePath", store_path)
-                    .parquet(*day_dirs)
-                    .select("second_ts", "src", "count_values", "day")
-                )
-                # broadcast the (small, update-mode) key set: the anti-join
-                # becomes a map-side probe instead of shuffling the whole
-                # touched-partition read
-                keep = existing.join(
-                    F.broadcast(updates.select("second_ts", "src")),
-                    ["second_ts", "src"],
-                    "left_anti",
-                )
-                merged = keep.unionByName(updates)
-            else:
-                merged = updates
-            # per-write option, NOT session conf: session-global dynamic
-            # mode would change overwrite semantics for every later write.
-            # coalesce(1): a micro-batch's merged rows are O(recent
-            # groups) — one file per touched day per batch keeps the
-            # store listing (paid by every poll, serving read AND the
-            # next upsert's existing-read) from growing 4x faster than
-            # the batch count.
-            merged.coalesce(1).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("day").parquet(store_path)
-        finally:
-            updates.unpersist(blocking=False)
+        ).coalesce(1).write.mode("overwrite").partitionBy("day").parquet(staging)
+        for part in sorted(os.listdir(staging)):
+            if not part.startswith("day="):
+                continue
+            day = part[len("day="):]
+            (staged,) = _parquet_files(os.path.join(staging, part))
+            with _locked_day_log(store_path, day) as log:
+                if epoch <= log.epoch:
+                    continue  # a replay of a committed epoch
+                name = f"part-{day}-e{epoch:012d}.parquet"
+                os.replace(staged, os.path.join(log.dir, name))
+                log.commit_epoch(name, epoch)
+        shutil.rmtree(staging)
 
-    writer = agg.writeStream.outputMode("update").foreachBatch(upsert)
+    # The watermark drops nothing in this stateless query (late events
+    # are counted, as NewEvent counts every insert); it makes the
+    # progress records carry eventTime, which the freshness figures read.
+    writer = events.withWatermark("ts", RETENTION).writeStream.foreachBatch(
+        write_epoch
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
@@ -132,12 +205,54 @@ def start_per_second_store(
     return writer.start()
 
 
+def _day_logs(store_path: str, since_day: str | None) -> list:
+    """The resolved logs of the days >= since_day (all days when None)."""
+    try:
+        names = os.listdir(store_path)
+    except FileNotFoundError:
+        return []
+    days = sorted(n[len("day="):] for n in names if n.startswith("day="))
+    return [_DayLog(store_path, d) for d in days if since_day is None or d >= since_day]
+
+
+def _read_files(spark: SparkSession, store_path: str, logs: list) -> DataFrame:
+    """Exactly the files the resolved `logs` list (STORE_SCHEMA); an
+    empty frame when they list none."""
+    names = [f for log in logs for f in log.files]
+    if not names:
+        return spark.createDataFrame([], STORE_SCHEMA)
+    return (
+        spark.read.schema(STORE_SCHEMA)
+        .option("basePath", store_path)
+        .parquet(*(log.dir for log in logs if log.files))
+        .filter(F.col("_metadata.file_name").isin(names))
+    )
+
+
+def committed_files(store_path: str, since_day: str | None = None) -> list:
+    """Paths of the files the latest log version of each day >= since_day
+    lists (all days when None); [] before the first commit."""
+    return [
+        os.path.join(log.dir, f) for log in _day_logs(store_path, since_day) for f in log.files
+    ]
+
+
+def read_store(
+    spark: SparkSession, store_path: str, since_day: str | None = None
+) -> DataFrame:
+    """The store's committed partial counts (STORE_SCHEMA) for days >=
+    since_day: exactly the files of `committed_files`, so no later commit
+    or compaction can remove a file this read listed before GRACE_S has
+    passed. Empty before the first commit."""
+    return _read_files(spark, store_path, _day_logs(store_path, since_day))
+
+
 def top_users_from_store(
     spark: SparkSession, store_path: str, as_of: str, window: int, k: int = 10
 ) -> DataFrame:
-    """GetTopUsers served from the store: day-partition pruning + recency
-    filter on the pre-aggregates + re-agg + top-k — never touches raw
-    events."""
+    """GetTopUsers served from the store: the committed files of the days
+    the window reaches + day-partition filter + recency filter on the
+    partials + re-agg + top-k — never touches raw events."""
     from datetime import datetime, timedelta
 
     from ..operators.serving import recency
@@ -148,7 +263,7 @@ def top_users_from_store(
         datetime.strptime(as_of, "%Y-%m-%d %H:%M:%S") - timedelta(seconds=window)
     ).strftime("%Y-%m-%d")
     return (
-        spark.read.parquet(store_path)
+        read_store(spark, store_path, cutoff_day)
         .filter(F.col("day") >= F.lit(cutoff_day).cast("date"))
         .filter(recency("second_ts", as_of, window))
         .groupBy("src")
@@ -162,8 +277,8 @@ def top_users_from_store(
 #
 # The serving store's parity with the batch view was test-only until round
 # 5; this registered query puts it under the driver's oracle gate: build
-# the store FROM THE STREAM (file-source → watermarked per-second agg →
-# foreachBatch upsert, Trigger.AvailableNow), then serve GetTopUsers from
+# the store FROM THE STREAM (file-source → per-epoch partial counts →
+# foreachBatch commit, Trigger.AvailableNow), then serve GetTopUsers from
 # the store. The oracle is the same SQL as batch `top_users` — serving
 # from the store must equal computing from raw events, which is exactly
 # the maintained-view claim (SURVEY.md §4 "serving reads cost O(window)").
@@ -174,9 +289,6 @@ def _cleanup_stores() -> None:
     """atexit hook: superseded builds are evicted eagerly (below), but the
     LAST build per (app, sf_dir) would otherwise outlive the process —
     one full per-second store copy leaked into /tmp per gate/bench run."""
-    import os
-    import shutil
-
     for store in _STORE_CACHE.values():
         shutil.rmtree(os.path.dirname(store), ignore_errors=True)
     _STORE_CACHE.clear()
@@ -189,8 +301,8 @@ _atexit.register(_cleanup_stores)
 
 def _store_for(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per app + source file version) the per-second serving
-    store for sf_dir's events; returns the store path."""
-    import os
+    store for sf_dir's events; returns the store path. A source with no
+    events leaves a store with no commit, which reads as empty."""
     import tempfile
 
     from ..tables import file_stamp
@@ -201,8 +313,6 @@ def _store_for(spark: SparkSession, sf_dir: str) -> str:
         file_stamp(f"{sf_dir}/events.parquet"),
     )
     if key not in _STORE_CACHE:
-        import shutil
-
         from .pipeline import events_stream
 
         # drop superseded store builds for the same (app, sf_dir) — a
@@ -212,34 +322,8 @@ def _store_for(spark: SparkSession, sf_dir: str) -> str:
             shutil.rmtree(
                 os.path.dirname(_STORE_CACHE.pop(old)), ignore_errors=True
             )
-        # path must NOT pre-exist: the upsert's existence probe treats an
-        # existing-but-empty dir as a readable store
         store = tempfile.mkdtemp(prefix="afs_store_") + "/per_second"
-        # Stateful streaming stages pin their partition count to
-        # spark.sql.shuffle.partitions at first run (no AQE coalescing);
-        # the one-shot small-SF build doesn't need 32 × per-stage task
-        # overhead. Scoped to the build, restored after.
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = start_per_second_store(events_stream(spark, sf_dir), store)
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if not _path_exists(spark, store):
-            # zero micro-batches wrote (empty events source): a store
-            # must still EXIST after a build — materialize the empty
-            # relation with the store's schema DERIVED from the same
-            # aggregation the upsert writes (plus the day partition
-            # column as DATE, matching partition-column inference), so
-            # this path can never drift from the populated-store schema
-            import pyspark.sql.types as T
-
-            agg_schema = per_second_counts(events_stream(spark, sf_dir)).schema
-            schema = T.StructType(
-                [*agg_schema.fields, T.StructField("day", T.DateType())]
-            )
-            spark.createDataFrame([], schema).write.parquet(store)
+        start_per_second_store(events_stream(spark, sf_dir), store).awaitTermination()
         _STORE_CACHE[key] = store
     return _STORE_CACHE[key]
 
@@ -265,36 +349,56 @@ _register()
 def compact_store_partition(
     spark: SparkSession, store_path: str, day: str, target_files: int = 1
 ) -> int:
-    """Small-file compaction for one day partition — micro-batch upserts
-    accumulate a file per batch; periodic compaction rewrites the
-    partition to `target_files` files with identical contents. Returns
-    the number of files before compaction.
+    """Small-file compaction for one day partition: fold the day's
+    committed files (one per epoch) into `target_files` pre-summed files
+    and publish a snapshot that lists them in place of their inputs.
+    Files committed while the fold runs stay listed; if a concurrent
+    compaction replaced an input first, the fold is discarded. Returns
+    the number of committed files before compaction.
 
-    Scale: compaction is per-partition (parallel across days, touches
-    only closed/old partitions), and the rewrite is an atomic
-    dynamic-partition overwrite — readers never see a partial state."""
-    part_dir = f"{store_path}/day={day}"
-    # Hadoop FS listing, not local glob: works for hdfs://, s3a://, etc.
-    fs, path = _hadoop_fs(spark, part_dir)
-    if not fs.exists(path):
-        raise FileNotFoundError(part_dir)
-    before = sum(
-        1
-        for st in fs.listStatus(path)
-        if st.getPath().getName().endswith(".parquet")
-    )
-    if before <= target_files:
-        return before
-    rows = (
-        spark.read.parquet(store_path)
-        .filter(F.col("day") == day)
-        .select("second_ts", "src", "count_values", "day")
-        .coalesce(target_files)
-    )
-    rows.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("day").parquet(store_path)
-    return before
+    Guarantee: a read sees the day either before or after the swap,
+    never a mix, because it reads only the files of one resolved
+    version. The superseded files stay on disk for GRACE_S, so a read
+    planned before the swap still finds them; each compaction of the day
+    deletes the files superseded more than GRACE_S ago. Until then a raw
+    `spark.read.parquet(store)` counts them twice."""
+    inputs = _DayLog(store_path, day)
+    if not inputs.versions:
+        raise FileNotFoundError(inputs.log)
+    staging = None
+    if len(inputs.files) > target_files:
+        staging = os.path.join(store_path, STAGING, f"compact-{uuid.uuid4().hex}")
+        (
+            _read_files(spark, store_path, [inputs])
+            .groupBy("second_ts", "src")
+            .agg(F.sum("count_values").alias("count_values"))
+            .coalesce(target_files)
+            .write.parquet(staging)
+        )
+    with _locked_day_log(store_path, day) as log:
+        now = time.time()
+        expired = [f for f, t in log.superseded if now - t > GRACE_S]
+        superseded = [[f, t] for f, t in log.superseded if now - t <= GRACE_S]
+        files = log.files
+        folded = staging is not None and set(inputs.files) <= set(log.files)
+        if folded:
+            new = []
+            for i, staged in enumerate(_parquet_files(staging)):
+                new.append(f"part-{day}-c{log.next_version:010d}-{i:03d}.parquet")
+                os.replace(staged, os.path.join(log.dir, new[-1]))
+            gone = set(inputs.files)
+            files = [f for f in log.files if f not in gone] + new
+            superseded += [[f, now] for f in inputs.files]
+        if folded or expired:
+            log.publish({"files": files, "superseded": superseded, "epoch": log.epoch})
+        for f in expired:
+            try:
+                os.remove(os.path.join(log.dir, f))
+            except FileNotFoundError:
+                pass
+    if staging is not None:
+        shutil.rmtree(staging)
+    return len(inputs.files)
 
 
 def measure_freshness_lag(
@@ -303,7 +407,6 @@ def measure_freshness_lag(
     duration_s: float = 15.0,
     rows_per_second: int = 20000,
     poll_s: float = 0.2,
-    shuffle_partitions: int | None = 8,
     warmup_timeout_s: float = 60.0,
 ) -> dict:
     """END-TO-END event-to-servable freshness: how stale is the serving
@@ -313,13 +416,13 @@ def measure_freshness_lag(
     throughput and serving-read latency were both measured but nothing
     measured the lag BETWEEN them. This drives the complete path —
     rate source → full_ingest_stream (dim lookup + centroid scoring) →
-    per-second aggregate → foreachBatch parquet upsert → readable
-    store scan — polling the store like a dashboard does and recording,
-    at every successful poll, the store's STALENESS: wall-clock now
+    per-epoch partial counts → foreachBatch commit → committed-store
+    scan — polling the store like a dashboard does and recording,
+    at every poll that finds data, the store's STALENESS: wall-clock now
     minus the end of the newest event-second visible in the store
     (rate-source event time is generation wall time, so the two clocks
     are the same machine clock). Staleness oscillates between roughly
-    one and two upsert-batch durations — exactly what a dashboard
+    one and two batch durations — exactly what a dashboard
     reader experiences between refreshes.
 
     Start-up is excluded two ways, mirroring the bench's ingest-rate
@@ -336,37 +439,19 @@ def measure_freshness_lag(
     bounded by `warmup_timeout_s` — if the pipeline genuinely cannot keep up,
     sampling starts anyway and the sustained lag is reported as
     observed. Returns {p50, p95, n, rows_per_second}; p50/p95 None when
-    fewer than 3 polls observed data.
-
-    shuffle_partitions sizes the stream's stateful agg + upsert to the
-    micro-batch data (a few thousand groups/s), not the session-wide
-    analytical default: at 32 partitions each ~1-second batch dragged a
-    32-task shuffle, 32 state-store commits and a 32-file rewrite
-    through ~5.5 s of wall — the dominant term of the measured lag —
-    where 8 partitions run the same batch in ~1.7 s. The stream runs on
-    a cloned session (same SparkContext) so the caller's session conf
-    is untouched."""
-    import time as _time
-
+    fewer than 3 polls observed data. A poll before the first commit
+    reads an empty store; any failed read raises."""
     from .pipeline import full_ingest_stream, rate_events_stream
 
-    s2 = spark
-    if shuffle_partitions is not None:
-        s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    events = full_ingest_stream(
-        s2, rate_events_stream(s2, rows_per_second)
-    )
-    q = start_per_second_store(
-        events, store_path, retention="10 minutes", available_now=False
-    )
+    events = full_ingest_stream(spark, rate_events_stream(spark, rows_per_second))
+    q = start_per_second_store(events, store_path, available_now=False)
     staleness: list = []
     # steady-state gate (see docstring): wait for the first caught-up
     # batch before opening the sampling window, bounded so a pipeline
     # that cannot keep up still gets measured.
-    t_gate = _time.time() + warmup_timeout_s
+    t_gate = time.time() + warmup_timeout_s
     steady_ids: list = []  # batchIds of consecutive caught-up batches
-    while _time.time() < t_gate:
+    while time.time() < t_gate:
         p = q.lastProgress
         if p and p["batchId"] >= 1 and p["numInputRows"] > 0:
             wall = (p["durationMs"].get("triggerExecution") or 1000) / 1e3
@@ -387,27 +472,21 @@ def measure_freshness_lag(
                     steady_ids = []
             if len(steady_ids) >= 2:
                 break
-        _time.sleep(poll_s)
-    t_end = _time.time() + duration_s
+        time.sleep(poll_s)
+    t_end = time.time() + duration_s
     try:
-        while _time.time() < t_end:
-            try:
-                newest = (
-                    spark.read.parquet(store_path)
-                    .agg(F.max("second_ts"))
-                    .collect()[0][0]
-                )
-            except Exception:
-                newest = None  # store not created yet / mid-write listing
+        while time.time() < t_end:
+            newest = (
+                read_store(spark, store_path).agg(F.max("second_ts")).collect()[0][0]
+            )
             if newest is not None:
-                # clamp at 0: under update mode the store can already
-                # hold the still-open current second (its END is in the
-                # future) — the dashboard is CURRENT, not negatively
-                # stale (review-flagged)
+                # clamp at 0: a batch can commit the still-open current
+                # second (its END is in the future) — the dashboard is
+                # CURRENT, not negatively stale (review-flagged)
                 staleness.append(
-                    max(0.0, _time.time() - (newest.timestamp() + 1.0))
+                    max(0.0, time.time() - (newest.timestamp() + 1.0))
                 )
-            _time.sleep(poll_s)
+            time.sleep(poll_s)
     finally:
         q.stop()
         try:

@@ -319,80 +319,330 @@ def test_serving_store_matches_batch_views(spark, sf_dir, tmp_path):
     ]
 
 
-def test_serving_store_multibatch_upsert(spark, sf_dir, tmp_path):
-    """The upsert's read-merge-write path: two micro-batches whose keys
-    overlap — untouched keys survive, updated keys carry the cumulative
-    count; final store == batch view over all events."""
-    from app_fastdata_spark.operators.views import events_by_second
-    from app_fastdata_spark.streaming import serving_store as S
-    from app_fastdata_spark.tables import (
-        SCHEMAS,
-        convert_raw_events,
-        events_ts_unit,
-        load_table,
-    )
-
+def _raw_event_files(spark, sf_dir, tmp_path, predicates) -> list:
+    """One single-file parquet copy of the raw events per predicate."""
     import glob as _glob
-    import shutil
 
-    src = tmp_path / "split_src"
-    src.mkdir()
+    from app_fastdata_spark.tables import SCHEMAS
+
     raw = spark.read.schema(SCHEMAS["events"]).parquet(f"{sf_dir}/events.parquet")
-    for name, half in [
-        ("a", raw.filter(F.col("event_id") % 2 == 0)),
-        ("b", raw.filter(F.col("event_id") % 2 == 1)),
-    ]:
-        out = tmp_path / f"half_{name}"
-        half.coalesce(1).write.parquet(str(out))
-        shutil.copy(_glob.glob(f"{out}/part-*.parquet")[0], src / f"{name}.parquet")
-    stream = convert_raw_events(
+    files = []
+    for i, pred in enumerate(predicates):
+        out = tmp_path / f"raw_{i}"
+        raw.filter(pred).coalesce(1).write.parquet(str(out))
+        files.append(_glob.glob(f"{out}/part-*.parquet")[0])
+    return files
+
+
+def _file_stream(spark, sf_dir, src):
+    """Events streamed from the parquet files in `src`, one file (one
+    micro-batch) per trigger."""
+    from app_fastdata_spark.tables import SCHEMAS, convert_raw_events, events_ts_unit
+
+    return convert_raw_events(
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src)),
         events_ts_unit(f"{sf_dir}/events.parquet"),
     )
-    store = str(tmp_path / "store")
-    q = S.start_per_second_store(stream, store)
-    q.awaitTermination()
-
-    got = spark.read.parquet(store).select("second_ts", "src", "count_values")
-    want = events_by_second(spark, sf_dir)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_serving_store_compaction(spark, sf_dir, tmp_path):
-    """Compaction rewrites a day partition to one file with identical
-    contents."""
-    import glob as _glob
+def _streamed_store(spark, sf_dir, tmp_path, predicates):
+    """A store built from one micro-batch per predicate's events."""
+    import shutil
 
     from app_fastdata_spark.streaming import serving_store as S
 
-    store = str(tmp_path / "store_c")
-    q = S.start_per_second_store(P.events_stream(spark, sf_dir), store)
-    q.awaitTermination()
-    days = sorted(
-        d.rsplit("=", 1)[1] for d in _glob.glob(f"{store}/day=*")
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, f in enumerate(_raw_event_files(spark, sf_dir, tmp_path, predicates)):
+        shutil.copy(f, src / f"{i}.parquet")
+    store = str(tmp_path / "store")
+    S.start_per_second_store(_file_stream(spark, sf_dir, src), store).awaitTermination()
+    return store
+
+
+def _store_totals(spark, store) -> list:
+    """The store's (second_ts, src, count) totals, re-aggregated from
+    the committed partials."""
+    from app_fastdata_spark.streaming import serving_store as S
+
+    return sorted(
+        map(
+            tuple,
+            S.read_store(spark, store)
+            .groupBy("second_ts", "src")
+            .agg(F.sum("count_values"))
+            .collect(),
+        )
     )
-    day = days[0]
-    # fragment the partition: rewrite it as many files first
-    frag = (
-        spark.read.parquet(store)
-        .filter(F.col("day") == day)
-        .select("second_ts", "src", "count_values", "day")
-        .repartition(8)
+
+
+def test_serving_store_multibatch_upsert(spark, sf_dir, tmp_path):
+    """Two micro-batches whose (second, src) keys overlap: the store
+    holds one partial per batch, and its re-aggregated totals equal the
+    counts over both batches' events (events in both count twice)."""
+    from app_fastdata_spark.streaming import serving_store as S
+    from app_fastdata_spark.tables import SCHEMAS, convert_raw_events, events_ts_unit
+
+    batches = [F.col("event_id") % 2 == 0, F.col("event_id") % 3 != 0]
+    raw = convert_raw_events(
+        spark.read.schema(SCHEMAS["events"]).parquet(f"{sf_dir}/events.parquet"),
+        events_ts_unit(f"{sf_dir}/events.parquet"),
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    frag.write.mode("overwrite").partitionBy("day").parquet(store)
-    before_rows = sorted(
-        map(tuple, spark.read.parquet(store).drop("day").collect())
+
+    def keys(frame):
+        return frame.select(
+            F.date_trunc("second", "ts").alias("second_ts"), F.col("user_id").alias("src")
+        )
+
+    shared = keys(raw.filter(batches[0])).intersect(keys(raw.filter(batches[1])))
+    assert shared.count() > 0
+    both = raw.filter(batches[0]).unionAll(raw.filter(batches[1]))
+    want = sorted(map(tuple, keys(both).groupBy("second_ts", "src").count().collect()))
+
+    store = _streamed_store(spark, sf_dir, tmp_path, batches)
+    assert _store_totals(spark, store) == want
+    # the shared keys are held as two partials, one per epoch
+    assert S.read_store(spark, store).count() == len(want) + shared.count()
+
+
+def test_serving_store_compaction(spark, sf_dir, tmp_path, monkeypatch):
+    """Compaction folds a day's per-epoch files into one pre-summed file
+    with identical re-aggregated contents; the superseded files stay on
+    disk until a later compaction after the grace period deletes them."""
+    import os
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    store = _streamed_store(
+        spark, sf_dir, tmp_path, [F.col("event_id") % 4 == r for r in range(4)]
     )
-    n_before = S.compact_store_partition(spark, store, day)
-    assert n_before == 8
-    assert len(_glob.glob(f"{store}/day={day}/*.parquet")) == 1
-    after_rows = sorted(
-        map(tuple, spark.read.parquet(store).drop("day").collect())
+    by_day = {}
+    for f in S.committed_files(store):
+        by_day.setdefault(os.path.basename(os.path.dirname(f)), []).append(f)
+    part, before_files = max(by_day.items(), key=lambda kv: len(kv[1]))
+    day = part.split("=", 1)[1]
+    assert len(before_files) > 1
+    before = _store_totals(spark, store)
+
+    def day_files():
+        return [f for f in S.committed_files(store, day) if f.startswith(f"{store}/{part}/")]
+
+    assert S.compact_store_partition(spark, store, day) == len(before_files)
+    (folded,) = day_files()
+    assert os.path.basename(folded).startswith(f"part-{day}-c")
+    assert all(os.path.exists(f) for f in before_files)
+    assert _store_totals(spark, store) == before
+
+    monkeypatch.setattr(S, "GRACE_S", 0.0)
+    assert S.compact_store_partition(spark, store, day) == 1
+    assert not any(os.path.exists(f) for f in before_files)
+    assert _store_totals(spark, store) == before
+
+
+def _pin_checkpoint(monkeypatch, checkpoint) -> None:
+    """Start every stream of the test from `checkpoint`, so a restarted
+    store stream resumes (or replays) where the last run stopped."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    real = DataStreamWriter.start
+    monkeypatch.setattr(
+        DataStreamWriter,
+        "start",
+        lambda self, *a, **k: real(
+            self.option("checkpointLocation", str(checkpoint)), *a, **k
+        ),
     )
-    assert before_rows == after_rows
+
+
+def test_store_read_survives_commit_and_compaction(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A store read planned (its files listed) before a micro-batch
+    commits, and another planned before a compaction, both execute after
+    it without error and return their snapshot or a newer one. A store
+    whose upsert rewrites the day partition deletes files under the
+    planned read (FILE_NOT_EXIST)."""
+    import glob as _glob
+    import shutil
+    from datetime import datetime, timedelta
+
+    from app_fastdata_spark.params import AS_OF, WINDOW_SECONDS
+    from app_fastdata_spark.streaming import serving_store as S
+    from app_fastdata_spark.tables import load_table
+
+    # Split the events in time at noon of a day inside the read window:
+    # the second batch then commits into a day partition the planned read
+    # listed, and none of its events is late for a watermarked stream.
+    split = datetime.strptime(AS_OF, "%Y-%m-%d %H:%M:%S") - timedelta(days=3, hours=12)
+    day_start = split.replace(hour=0)
+    events = load_table(spark, sf_dir, "events")
+    first_after = events.filter(F.col("ts") >= F.lit(split)).agg(F.min("event_id")).first()[0]
+    for lo, hi in ((day_start, split), (split, day_start + timedelta(days=1))):
+        assert events.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") < F.lit(hi))).count()
+    files = _raw_event_files(
+        spark,
+        sf_dir,
+        tmp_path,
+        [F.col("event_id") < first_after, F.col("event_id") >= first_after],
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    store = str(tmp_path / "store")
+    _pin_checkpoint(monkeypatch, tmp_path / "ckpt")
+
+    def top():
+        return S.top_users_from_store(spark, store, AS_OF, WINDOW_SECONDS)
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    def run_stream():
+        S.start_per_second_store(_file_stream(spark, sf_dir, src), store).awaitTermination()
+
+    shutil.copy(files[0], src / "0.parquet")
+    run_stream()
+    snapshot, planned = rows(top()), top()
+    shutil.copy(files[1], src / "1.parquet")
+    run_stream()
+    newer = rows(top())
+    assert newer != snapshot
+    assert rows(planned) in (snapshot, newer)
+
+    planned = top()
+    for d in sorted(_glob.glob(f"{store}/day=*")):
+        S.compact_store_partition(spark, store, d.rsplit("=", 1)[1])
+    assert rows(planned) in (newer, rows(top()))
+    assert rows(top()) == newer
+
+
+def test_store_epoch_replay_is_idempotent(spark, sf_dir, tmp_path, monkeypatch):
+    """A replayed epoch leaves the store as it was, with one file for
+    the epoch: (1) replayed after its commit was published, and (2)
+    replayed after its file was renamed into place but before any day
+    log published it (the rename overwrites that file)."""
+    import glob as _glob
+    import json
+    import os
+    import shutil
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    files = _raw_event_files(
+        spark, sf_dir, tmp_path, [F.col("event_id") % 2 == r for r in range(2)]
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, f in enumerate(files):
+        shutil.copy(f, src / f"{i}.parquet")
+    store = str(tmp_path / "store")
+    checkpoint = tmp_path / "ckpt"
+    _pin_checkpoint(monkeypatch, checkpoint)
+
+    def run_stream():
+        S.start_per_second_store(_file_stream(spark, sf_dir, src), store).awaitTermination()
+
+    def on_disk():
+        return sorted(_glob.glob(f"{store}/day=*/*.parquet"))
+
+    run_stream()
+    last = max(int(n) for n in os.listdir(checkpoint / "commits") if n.isdigit())
+    epoch_files = sorted(_glob.glob(f"{store}/day=*/part-*-e{last:012d}.parquet"))
+    assert epoch_files
+    want = (_store_totals(spark, store), on_disk(), sorted(S.committed_files(store)))
+
+    def forget_commit():
+        for n in (str(last), f".{last}.crc"):
+            if (checkpoint / "commits" / n).exists():
+                (checkpoint / "commits" / n).unlink()
+
+    forget_commit()
+    run_stream()
+    assert (_store_totals(spark, store), on_disk(), sorted(S.committed_files(store))) == want
+
+    forget_commit()
+    for f in epoch_files:
+        log = os.path.join(os.path.dirname(f), S.MANIFEST)
+        latest = max(n for n in os.listdir(log) if n.endswith(".json") and n[0] != ".")
+        with open(os.path.join(log, latest)) as fh:
+            assert json.load(fh) == {"add": [os.path.basename(f)], "epoch": last}
+        os.remove(os.path.join(log, latest))
+    assert len(S.committed_files(store)) == len(want[2]) - len(epoch_files)
+    run_stream()
+    assert (_store_totals(spark, store), on_disk(), sorted(S.committed_files(store))) == want
+
+
+def test_store_day_log_commits_lose_no_update(tmp_path):
+    """Commits to one day's log from more threads than cores, each a
+    read-modify-write of the log under its lock: every commit is listed
+    once and the versions run without a gap (a lost update would publish
+    two commits as one version)."""
+    import os
+    import sys
+    import threading
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    store, day, threads, commits = str(tmp_path / "store"), "2024-01-01", 8, 40
+
+    def work():
+        for _ in range(commits):
+            with S._locked_day_log(store, day) as log:
+                epoch = log.epoch + 1
+                log.commit_epoch(f"part-{day}-e{epoch:012d}.parquet", epoch)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [threading.Thread(target=work) for _ in range(threads)]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=120)
+        assert not any(w.is_alive() for w in workers)
+    finally:
+        sys.setswitchinterval(old)
+    log = S._DayLog(store, day)
+    n = threads * commits
+    assert log.files == [f"part-{day}-e{e:012d}.parquet" for e in range(n)]
+    assert log.epoch == n - 1 and log.versions[-1] == n - 1
+    # snapshots bound the log: older versions were dropped
+    assert len(os.listdir(log.log)) < 3 * S.SNAPSHOT_EVERY
+
+
+def test_store_path_sets_no_session_conf(spark, sf_dir, tmp_path, monkeypatch):
+    """The store path must not flip session-global Spark conf: a cold
+    top_users_from_store_query build and one start_per_second_store run
+    make no RuntimeConfig.set call that changes a value."""
+    import os
+    import shutil
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    changed = []
+    real = RuntimeConfig.set
+
+    def recording(self, key, value):
+        new = str(value).lower() if isinstance(value, bool) else str(value)
+        if self.get(key, None) != new:
+            changed.append((key, value))
+        return real(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording)
+    cold: dict = {}
+    monkeypatch.setattr(S, "_STORE_CACHE", cold)
+    try:
+        assert S.top_users_from_store_query(spark, sf_dir).collect()
+    finally:
+        for store in cold.values():
+            shutil.rmtree(os.path.dirname(store), ignore_errors=True)
+    store = str(tmp_path / "store")
+    S.start_per_second_store(P.events_stream(spark, sf_dir), store).awaitTermination()
+    assert changed == []
+    assert S.committed_files(store)
 
 
 def test_quality_gate_stream_matches_batch(spark, sf_dir, tmp_path):
