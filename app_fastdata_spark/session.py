@@ -1,9 +1,9 @@
 """SparkSession factory tuned for the local[N] test/bench environment.
 
 Settings chosen for scale-readiness: AQE on (runtime re-plan, skew-join,
-partition coalescing), shuffle partitions sized to cores (overridable for a
-real cluster), Arrow enabled for the Pandas-UDF slow path, UTC session
-timezone so timestamp semantics match the DuckDB oracle exactly.
+partition coalescing), shuffle partitions sized to cores, Arrow enabled
+for the Pandas-UDF slow path, UTC session timezone so timestamp
+semantics match the DuckDB oracle exactly.
 
 Memory envelope: this JVM shares one cgroup with 32 Python UDF workers
 and (in the correctness gate) a DuckDB process, so the heap is sized for
@@ -25,11 +25,10 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "app_fastdata_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -412,32 +412,14 @@ def _input_bytes(path: str) -> int:
 # are unreliable, §3.1); at or above it the hint is withheld and
 # Catalyst/AQE picks the strategy from ACTUAL sizes — a still-small
 # build side still broadcasts via autoBroadcastJoinThreshold, a huge one
-# degrades to a shuffle join instead of an OOM. Same env-overridable
-# seam pattern as GEMM_MIN_ROWS; every driver testdata SF sits far
-# below the default, so gated plans are unchanged where the plan tests
-# pin them (the seam tests flip the env and assert the hint disappears).
+# degrades to a shuffle join instead of an OOM. ~8M source rows bounds
+# the worst hinted build at a few hundred MB framed — §3.1's 'usually
+# fine' ceiling — far under the 8 GB / 512M-row hard broadcast cap.
+# Every driver testdata SF sits far below it, so gated plans are
+# unchanged where the plan tests pin them. A constant, not a setting:
+# memoized plans bake the gate in, so a value that could change
+# mid-session would leave them stale.
 BROADCAST_MAX_ROWS = 8_000_000
-_BROADCAST_MAX_ROWS_ENV = "SPARK_GRAFT_BROADCAST_MAX_ROWS"
-
-
-def broadcast_max_rows() -> int:
-    """The gate threshold, read per call so tests (and a deployment
-    that knows its driver memory) can override via env. ~8M source
-    rows bounds the worst hinted build at a few hundred MB framed —
-    §3.1's 'usually fine' ceiling — far under the 8 GB / 512M-row hard
-    broadcast cap. NOTE: memoized_build plans do not re-derive on an
-    env flip mid-session (the stamp key carries no env) — flip it
-    before the session builds the plan, as the seam tests do via the
-    undecorated `__wrapped__` builder."""
-    import os as _os
-
-    raw = _os.environ.get(_BROADCAST_MAX_ROWS_ENV)
-    if raw:
-        try:
-            return int(raw)
-        except ValueError:
-            pass
-    return BROADCAST_MAX_ROWS
 
 
 def maybe_broadcast(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
@@ -449,7 +431,7 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     the risky choice, and Catalyst still broadcasts provably-small
     sides on its own."""
     n = parquet_num_rows(f"{sf_dir}/{table}.parquet")
-    if n is not None and n < broadcast_max_rows():
+    if n is not None and n < BROADCAST_MAX_ROWS:
         return F.broadcast(df)
     return df
 

@@ -1,7 +1,12 @@
-"""Bench harness (driver contract): runs the headline queries at
+"""Bench harness (driver contract): times registered queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+
+Usage: python bench.py [query ...]
+With no names it times HEADLINE and runs the connected-components
+probes (the full run); with names it times exactly those queries,
+in the given order, and nothing else.
 """
 
 from __future__ import annotations
@@ -192,11 +197,9 @@ def compact_line(
     timings: dict[str, float],
     sf: float,
     runs: int,
-    ingest_eps: float | None,
-    cc_label_errors: int,
+    cc_label_errors: int | None,
     artifact: str = "BENCH_LAST.json",
     load1: list | None = None,
-    freshness_p95: float | None = None,
     total_cold: float | None = None,
 ) -> str:
     """The guaranteed-parseable final stdout line: total + the serving
@@ -221,8 +224,6 @@ def compact_line(
         "runs_per_query": runs,
         "queries": compact_q,
         "worst": {},
-        "ingest_eps": ingest_eps,
-        "fresh_p95": freshness_p95,
         "cc_dist_label_errors": cc_label_errors,
         # [load1 at start, load1 at end] vs n_cpus — the contention
         # regime in the line the driver actually records
@@ -281,105 +282,52 @@ def _git_head() -> str | None:
     """HEAD commit of the repo this bench.py sits in — stamped into the
     artifact so a promoted BENCH_FULL.json that predates the current
     tree is detectable (r11 ADVICE: the curated artifact could silently
-    go stale once ordinary runs stopped overwriting it)."""
-    import subprocess
-
+    go stale once ordinary runs stopped overwriting it). Read from
+    `.git` itself, so the bench starts no process besides its JVM."""
+    git = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".git")
     try:
-        return subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True, text=True, timeout=10, check=True,
-        ).stdout.strip() or None
-    except Exception:
+        with open(os.path.join(git, "HEAD")) as f:
+            head = f.read().strip()
+        if head.startswith("ref: "):
+            ref = head[len("ref: "):]
+            try:
+                with open(os.path.join(git, ref)) as f:
+                    head = f.read().strip()
+            except FileNotFoundError:
+                with open(os.path.join(git, "packed-refs")) as f:
+                    head = next(
+                        ln.split()[0] for ln in f if ln.split()[1:] == [ref]
+                    )
+        return head[:7] or None
+    except (OSError, StopIteration):
         return None
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    load_before = sample_load()
-    # End-to-end event-to-servable freshness (r12 judge Next #7),
-    # measured in a DEDICATED subprocess BEFORE this process's JVM
-    # exists: the in-process A/B showed the 20 s streaming probe taxes
-    # the timed loop ~7-9 s with state-store/GC debris, and its
-    # teardown flushes an async stderr stack trace that must never
-    # land near the final parseable line (the BENCH_r07 lesson). The
-    # subprocess isolates both; see tools/freshness_probe.py.
-    freshness: dict = {"n": 0, "p50": None, "p95": None}
-    if os.environ.get("SPARK_GRAFT_SKIP_FRESHNESS") != "1":
-        import subprocess
+def select_queries(names: list[str]) -> list[str]:
+    """The queries one bench run times, in order: ``names`` when given,
+    else HEADLINE. Unknown names exit non-zero, listing them; callers
+    select before starting Spark, so a typo costs no session."""
+    if not names:
+        return list(HEADLINE)
+    registered = queries()
+    unknown = [n for n in names if n not in registered]
+    if unknown:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
+    return list(names)
 
-        try:
-            proc = subprocess.run(
-                [
-                    sys.executable,
-                    os.path.join(
-                        os.path.dirname(os.path.abspath(__file__)),
-                        "tools",
-                        "freshness_probe.py",
-                    ),
-                ],
-                capture_output=True,
-                text=True,
-                timeout=240,
-            )
-            for line in reversed(proc.stdout.strip().splitlines()):
-                try:
-                    freshness = json.loads(line)
-                    break
-                except json.JSONDecodeError:
-                    continue
-        except Exception:
-            pass  # probe failure must never kill the bench
-    spark = get_spark("bench")
-    qs = queries()
-    timings: dict[str, float] = {}
-    # Warm EVERY headline query at sf0.001 so timings measure data-scale
-    # execution, not one-time infrastructure: the first run of each plan
-    # pays Janino/JIT compilation of its whole-stage-codegen pipeline and
-    # the first touch of each table's file listing (measured 3.1s cold →
-    # 0.4s warm for dedup_exact — r2's "+83% regression" was exactly this
-    # artifact: r2 reordered HEADLINE so dedup_exact became the first
-    # documents-table query, absorbing the cold cost that r1 amortized
-    # elsewhere). Per-query warm numbers are comparable across rounds
-    # regardless of ordering.
-    warm_dir = "/root/testdata/sf0.001"
-    for w in HEADLINE:
-        qs[w](spark, warm_dir).write.format("noop").mode("overwrite").save()
-    # min-of-2 at the target SF: single-shot timings on a shared sandbox
-    # carry ±20% scheduler noise (measured: four identical-config bench
-    # runs spanned 28.5-33.5 s total); the minimum of two runs is the
-    # standard way to estimate the un-contended cost without inflating
-    # the suite much. runs_per_query is recorded in the output line.
-    RUNS = 2
-    timings_cold: dict[str, float] = {}
-    for name in HEADLINE:
-        per_run: list[float] = []
-        for _ in range(RUNS):
-            # honesty gate (r13 verdict Next #1): a query must never
-            # serve its own memoized output inside the timed region
-            for store in RESULT_MEMO_STORES.get(name, ()):
-                session_clear(store)
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            # noop sink: executes the FULL plan (no column pruning from
-            # count, no driver collect overhead in the measurement).
-            df.write.format("noop").mode("overwrite").save()
-            per_run.append(time.time() - t0)
-        # warm headline number stays min-of-RUNS (same methodology as
-        # every prior round); the FIRST run is additionally recorded so
-        # the artifact carries the cost of per-data-version artifact/
-        # plan builds that the warm number amortizes away.
-        timings[name] = round(min(per_run), 3)
-        timings_cold[name] = round(per_run[0], 3)
-    total = round(sum(timings.values()), 3)
-    total_cold = round(sum(timings_cold.values()), 3)
-    # Convergence telemetry for the clustering chain (not part of the
-    # headline total): iterations-to-converge of connected components over
-    # the capped pair source at this SF — a pair-source change that alters
-    # graph shape shows up here across rounds.
-    from app_fastdata_spark.operators.dedup import dedup_components
 
+def cc_probes(spark, sf_dir: str) -> dict:
+    """Connected-components telemetry, outside the headline total."""
+    from pyspark.sql import functions as F
+
+    from app_fastdata_spark.operators.dedup import (
+        connected_components,
+        dedup_components,
+    )
+
+    # Convergence of connected components over the capped pair source at
+    # this SF — a pair-source change that alters graph shape shows up
+    # here across rounds.
     cc_stats: dict = {}
     t0 = time.time()
     dedup_components(spark, sf_dir, stats_out=cc_stats).write.format(
@@ -393,10 +341,6 @@ def main() -> None:
     # component of node u is u - u%100) forces the distributed path
     # (local_max_edges=0) and the post-run filter verifies EVERY label
     # against ground truth — a full-result parity check, not a sample.
-    from pyspark.sql import functions as F
-
-    from app_fastdata_spark.operators.dedup import connected_components
-
     chain_nodes = 2_050_000
     chain = (
         spark.range(chain_nodes)
@@ -418,59 +362,74 @@ def main() -> None:
             (F.col("component") != (F.col("u") - F.col("u") % 100)).cast("long")
         ).alias("bad"),
     ).first()
-    dcc_wall = round(time.time() - t0, 3)
-    dcc_bad = int(row["bad"] or 0) + abs(chain_nodes - int(row["n"]))
-    # Ingest throughput as a measured NUMBER (BASELINE.md run.sh:159
-    # target: ≥20k events/s): rate source at 50k rows/s through
-    # full_ingest_stream (literal dim lookup + inline centroid
-    # scoring — the complete NewEvent hot loop) into a noop sink;
-    # record the MEDIAN steady-state processedRowsPerSecond (the
-    # sustained number — a single-batch peak can certify a target the
-    # pipeline does not hold) plus the peak for reference.
-    from app_fastdata_spark.streaming.pipeline import (
-        full_ingest_stream,
-        rate_events_stream,
-    )
+    return {
+        "cc_iters": cc_stats.get("iters"),
+        "cc_mode": cc_stats.get("mode"),
+        "cc_edges": cc_stats.get("edges"),
+        "cc_wall_sec": cc_wall,
+        "cc_distributed_edges": dcc_stats.get("edges"),
+        "cc_distributed_iters": dcc_stats.get("iters"),
+        "cc_distributed_wall_sec": round(time.time() - t0, 3),
+        "cc_distributed_label_errors": int(row["bad"] or 0)
+        + abs(chain_nodes - int(row["n"])),
+    }
 
-    # Silence the JVM logger for the stream's whole lifecycle: q.stop()
-    # cancels in-flight tasks and the resulting TaskKilled WARN lines are
-    # flushed ASYNCHRONOUSLY by the JVM — in round 7 they landed AFTER the
-    # JSON print and pushed the line out of the driver's output tail
-    # (BENCH_r07 parsed:null). FATAL before start() guarantees the spam is
-    # never emitted at all.
-    spark.sparkContext.setLogLevel("FATAL")
-    q = (
-        full_ingest_stream(spark, rate_events_stream(spark, rows_per_second=50000))
-        .writeStream.format("noop")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        time.sleep(20)
-        rates = [
-            p["processedRowsPerSecond"]
-            for p in q.recentProgress
-            if p["numInputRows"] > 0
-        ]
-        # drop the first two progress entries: the initial batches pay
-        # stream start-up (state store init, first codegen) and a
-        # backlog spike, which pulled the 12 s-window median around by
-        # ±40% between otherwise-identical solo runs
-        if len(rates) > 6:
-            rates = rates[2:]
-    finally:
-        q.stop()
-        try:
-            q.awaitTermination(30)
-        except Exception:
-            pass
-    if rates:
-        import statistics
 
-        ingest_eps = round(statistics.median(rates), 1)
-        ingest_eps_peak = round(max(rates), 1)
-    else:
-        ingest_eps = ingest_eps_peak = None
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    names = select_queries(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    load_before = sample_load()
+    spark = get_spark("bench")
+    qs = queries()
+    timings: dict[str, float] = {}
+    # Warm EVERY timed query at sf0.001 so timings measure data-scale
+    # execution, not one-time infrastructure: the first run of each plan
+    # pays Janino/JIT compilation of its whole-stage-codegen pipeline and
+    # the first touch of each table's file listing (measured 3.1s cold →
+    # 0.4s warm for dedup_exact — r2's "+83% regression" was exactly this
+    # artifact: r2 reordered HEADLINE so dedup_exact became the first
+    # documents-table query, absorbing the cold cost that r1 amortized
+    # elsewhere). Per-query warm numbers are comparable across rounds
+    # regardless of ordering.
+    warm_dir = "/root/testdata/sf0.001"
+    for w in names:
+        qs[w](spark, warm_dir).write.format("noop").mode("overwrite").save()
+    # min-of-2 at the target SF: single-shot timings on a shared sandbox
+    # carry ±20% scheduler noise (measured: four identical-config bench
+    # runs spanned 28.5-33.5 s total); the minimum of two runs is the
+    # standard way to estimate the un-contended cost without inflating
+    # the suite much. runs_per_query is recorded in the output line.
+    RUNS = 2
+    timings_cold: dict[str, float] = {}
+    timings_build: dict[str, float] = {}
+    for name in names:
+        per_run: list[tuple[float, float]] = []
+        for _ in range(RUNS):
+            # honesty gate (r13 verdict Next #1): a query must never
+            # serve its own memoized output inside the timed region
+            for store in RESULT_MEMO_STORES.get(name, ()):
+                session_clear(store)
+            t0 = time.time()
+            df = qs[name](spark, sf_dir)
+            t_built = time.time()
+            # noop sink: executes the FULL plan (no column pruning from
+            # count, no driver collect overhead in the measurement).
+            df.write.format("noop").mode("overwrite").save()
+            per_run.append((time.time() - t0, t_built - t0))
+        # warm headline number stays min-of-RUNS (same methodology as
+        # every prior round), with the plan-build seconds of that same
+        # run; the FIRST run is additionally recorded so the artifact
+        # carries the cost of per-data-version artifact/plan builds
+        # that the warm number amortizes away.
+        wall, build = min(per_run)
+        timings[name] = round(wall, 3)
+        timings_build[name] = round(build, 3)
+        timings_cold[name] = round(per_run[0][0], 3)
+    total = round(sum(timings.values()), 3)
+    total_cold = round(sum(timings_cold.values()), 3)
+    cc = {} if argv else cc_probes(spark, sf_dir)
     # Tear the JVM down COMPLETELY before emitting the contract lines, so
     # nothing can write to stdout/stderr after them; flush both streams and
     # make the compact JSON the absolute last bytes of the process.
@@ -488,22 +447,12 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_cold": timings_cold,
+        # builder call → DataFrame returned, in the run the warm wall
+        # came from: driver-side plan construction vs execution
+        "queries_build": timings_build,
         "runs_per_query": RUNS,
         "sf": float(sf),
-        "cc_iters": cc_stats.get("iters"),
-        "cc_mode": cc_stats.get("mode"),
-        "cc_edges": cc_stats.get("edges"),
-        "cc_wall_sec": cc_wall,
-        "cc_distributed_edges": dcc_stats.get("edges"),
-        "cc_distributed_iters": dcc_stats.get("iters"),
-        "cc_distributed_wall_sec": dcc_wall,
-        "cc_distributed_label_errors": dcc_bad,
-        "ingest_events_per_sec": ingest_eps,
-        "ingest_events_per_sec_peak": ingest_eps_peak,
-        # store staleness through the full ingest->upsert->read path;
-        # load-sensitive like every wall number here (quiet: ~3 s p50 at
-        # ~1.7 s upsert batches; contended runs ride the batch wall up)
-        "freshness_lag": freshness,
+        **cc,
         # contention self-description (see sample_load): loadavg[0]
         # near ncpu at 'before' = a concurrent suite/JVM was running and
         # short scan-bound timings are inflated 1.2-2x (README protocol)
@@ -536,10 +485,9 @@ def main() -> None:
     except OSError:
         pass  # a read-only checkout must not kill the contract line
     line = compact_line(
-        total, timings, float(sf), RUNS, ingest_eps, dcc_bad,
+        total, timings, float(sf), RUNS, cc.get("cc_distributed_label_errors"),
         artifact=artifact,
         total_cold=total_cold,
-        freshness_p95=freshness.get("p95"),
         load1=[
             (lb or [None])[0]
             for lb in (load_before.get("loadavg"), load_after.get("loadavg"))

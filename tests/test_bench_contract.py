@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from bench import COMPACT_HARD_CAP, HEADLINE, SERVING, compact_line
 
 
@@ -17,9 +19,7 @@ def _fake_timings(names):
 
 def test_compact_line_fits_and_parses_for_current_headline():
     timings = _fake_timings(HEADLINE)
-    line = compact_line(
-        123.456, timings, 0.1, 2, 92252.1, 0, load1=[31.12, 2.4]
-    )
+    line = compact_line(123.456, timings, 0.1, 2, 0, load1=[31.12, 2.4])
     assert len(line) <= COMPACT_HARD_CAP
     d = json.loads(line)
     assert d["metric"] == "headline_queries_total_wall"
@@ -42,9 +42,7 @@ def test_compact_line_carries_cold_total():
     the cold (first-run) total next to the warm min-of-RUNS headline, so
     per-data-version artifact builds are never invisible."""
     timings = _fake_timings(HEADLINE)
-    line = compact_line(
-        123.456, timings, 0.1, 2, 92252.1, 0, total_cold=200.5
-    )
+    line = compact_line(123.456, timings, 0.1, 2, 0, total_cold=200.5)
     assert len(line) <= COMPACT_HARD_CAP
     d = json.loads(line)
     assert d["value_cold"] == 200.5
@@ -82,11 +80,10 @@ def test_compact_line_survives_pathological_registry():
              for i in range(400)]
     names[:5] = SERVING  # keep the serving set present
     timings = _fake_timings(names)
-    line = compact_line(999.9, timings, 0.1, 2, None, 3)
+    line = compact_line(999.9, timings, 0.1, 2, 3)
     assert len(line) <= COMPACT_HARD_CAP
     d = json.loads(line)
     assert d["n_queries"] == 400
-    assert d["ingest_eps"] is None
     assert d["cc_dist_label_errors"] == 3
     assert len(d["worst"]) >= 1  # still says SOMETHING about the tail
 
@@ -94,7 +91,7 @@ def test_compact_line_survives_pathological_registry():
 def test_compact_line_handles_missing_serving_queries():
     # a subset bench run (env-filtered HEADLINE) must not KeyError
     timings = _fake_timings(["only_one_query"])
-    line = compact_line(1.0, timings, 0.001, 1, 5.0, 0)
+    line = compact_line(1.0, timings, 0.001, 1, 0)
     d = json.loads(line)
     assert d["queries"] == {} and d["n_queries"] == 1
 
@@ -111,9 +108,33 @@ def test_compact_line_degrades_instead_of_asserting_past_hard_cap():
     orig = bench.SERVING
     bench.SERVING = list(huge)
     try:
-        line = compact_line(1.0, huge, 0.1, 2, None, 0)
+        line = compact_line(1.0, huge, 0.1, 2, 0)
     finally:
         bench.SERVING = orig
     assert len(line) <= COMPACT_HARD_CAP
     d = json.loads(line)
     assert d["metric"] == "headline_queries_total_wall"
+
+
+def test_query_selector_orders_names_and_rejects_unknown_before_spark(
+    monkeypatch,
+):
+    """`python bench.py [query ...]`: no names times HEADLINE in order,
+    names time exactly those in the given order, and an unknown name
+    exits non-zero, listing it, before a SparkSession is asked for."""
+    import bench
+
+    assert bench.select_queries([]) == HEADLINE
+    assert bench.select_queries(["tpch_q16_supplier_cnt", "top_users"]) == [
+        "tpch_q16_supplier_cnt",
+        "top_users",
+    ]
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("SparkSession requested")
+
+    monkeypatch.setattr(bench, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        bench.main(["top_users", "no_such_query", "nor_this"])
+    assert exc.value.code != 0
+    assert "no_such_query nor_this" in str(exc.value.code)

@@ -95,20 +95,42 @@ def test_bucketed_join_query_matches_unbucketed(spark, sf_dir):
 
 
 def test_bloom_filter_prunes_probe_side(spark, sf_dir):
-    """The runtime Bloom filter must reach the probe (lineitem) side of
-    the shuffle join, and pruning must not change the result."""
-    from app_fastdata_spark.plans.runtime_filters import bloom_pruned_join
-    from app_fastdata_spark.tables import load_table
+    """Runtime Bloom-filter join pruning, the fact⋈filtered-fact
+    technique: a filter built from the selective build side's join keys
+    (urgent orders) is injected into the probe side's scan (lineitem) as
+    `might_contain(...)`, dropping rows that cannot match before the
+    shuffle. Spark injects it only when the probe scan exceeds
+    `applicationSideScanSizeThreshold` (10 GB default), so a clone
+    session lowers that threshold and disables auto-broadcast (the join
+    must shuffle); the parent session's conf is untouched. The filter
+    must reach the probe side, and pruning must not change the
+    result."""
+    clone = spark.newSession()
+    clone.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    clone.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter"
+        ".applicationSideScanSizeThreshold",
+        "0",
+    )
 
-    joined = bloom_pruned_join(spark, sf_dir)
+    def join(session):
+        # read through the session itself (as load_table reads these
+        # schema-less tables): load_table's frame cache is keyed on the
+        # applicationId the clone shares, and would hand back frames
+        # bound to the parent session and its conf
+        li, orders = (
+            session.read.parquet(f"{sf_dir}/{t}.parquet")
+            for t in ("lineitem", "orders")
+        )
+        urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
+        return li.join(urgent, li.l_orderkey == urgent.o_orderkey).select(
+            "l_orderkey", "l_quantity", "o_totalprice"
+        )
+
+    joined = join(clone)
     plan = joined._jdf.queryExecution().optimizedPlan().toString()
     assert "might_contain" in plan, plan
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    want = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-    assert joined.count() == want
+    assert joined.count() == join(spark).count()
 
 
 def test_forced_broadcasts_are_size_gated(spark, sf_dir, monkeypatch):
@@ -120,6 +142,7 @@ def test_forced_broadcasts_are_size_gated(spark, sf_dir, monkeypatch):
     the pinned plan shapes are unchanged); with the gate flipped to 0
     the hint disappears from the analyzed plan, Catalyst/AQE owns the
     strategy, and the result set is identical."""
+    from app_fastdata_spark import tables
     from app_fastdata_spark.operators.tpch import (
         tpch_q3_top_orders,
         tpch_q16_supplier_cnt,
@@ -128,8 +151,8 @@ def test_forced_broadcasts_are_size_gated(spark, sf_dir, monkeypatch):
     def analyzed(df) -> str:
         return df._jdf.queryExecution().analyzed().toString()
 
-    # both are memoized_build-wrapped; the memo key carries no env, so
-    # the seam is exercised through the undecorated builders
+    # both are memoized_build-wrapped and the memo bakes the gate in,
+    # so the gate is exercised through the undecorated builders
     q3 = tpch_q3_top_orders.__wrapped__
     q16 = tpch_q16_supplier_cnt.__wrapped__
 
@@ -140,7 +163,7 @@ def test_forced_broadcasts_are_size_gated(spark, sf_dir, monkeypatch):
     want_q3 = [tuple(r) for r in hinted_q3.collect()]
     want_q16 = [tuple(r) for r in hinted_q16.collect()]
 
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_ROWS", "0")
+    monkeypatch.setattr(tables, "BROADCAST_MAX_ROWS", 0)
     gated_q3 = q3(spark, sf_dir)
     gated_q16 = q16(spark, sf_dir)
     assert "ResolvedHint" not in analyzed(gated_q3), analyzed(gated_q3)

@@ -1846,25 +1846,39 @@ def test_graph_maintain_then_serve_closed_loop(spark, sf_dir, tmp_path):
 @pytest.mark.slow
 def test_freshness_lag_under_demo_cadence(spark, tmp_path):
     """The reference's defining property is the dashboard reading
-    ~1-second-fresh aggregates (demo.js:3-22): the serving store must
-    be CONTINUOUSLY fresh while the full ingest stream maintains it.
-    measure_freshness_lag drives rate source → full_ingest_stream →
-    per-second agg → parquet upsert → store reads at the demo's 1 s
-    trigger cadence and reports store staleness percentiles; the
-    pipeline must produce observations and keep staleness bounded by a
-    few upsert batch walls (generous cap: shared-sandbox batches have
-    measured 1.7 s quiet to ~7 s under heavy load)."""
+    ~1-second-fresh aggregates (demo.js:3-22): while the full ingest
+    stream (rate source → full_ingest_stream → per-epoch partial counts
+    → committed store) runs at the demo's 1 s trigger, a store read
+    during ingest must see recent seconds. The bound is generous
+    (batches on a shared machine have measured 1.7 s quiet to ~7 s under
+    heavy load); perfbench's `stream` workload measures the freshness
+    figures themselves."""
     from app_fastdata_spark.streaming.serving_store import (
-        measure_freshness_lag,
+        read_store,
+        start_per_second_store,
     )
 
-    out = measure_freshness_lag(
-        spark, str(tmp_path / "store"), duration_s=25.0,
-        rows_per_second=5000,
-    )
-    assert out["n"] >= 3, out
-    assert out["p50"] is not None and 0 <= out["p50"] <= out["p95"], out
-    assert out["p95"] < 30.0, out
+    store = str(tmp_path / "store")
+    events = P.full_ingest_stream(spark, P.rate_events_stream(spark, 5000))
+    q = start_per_second_store(events, store, available_now=False)
+    try:
+        time.sleep(25)
+        n, newest = (
+            read_store(spark, store)
+            .agg(F.count("*"), F.max("second_ts"))
+            .first()
+        )
+        lag_s = time.time() - (newest.timestamp() + 1.0) if newest else None
+        progress = q.recentProgress
+    finally:
+        q.stop()
+        try:
+            q.awaitTermination(30)
+        except Exception:
+            pass
+    assert n > 0 and newest is not None
+    assert lag_s < 30.0, lag_s
+    assert any(p["numInputRows"] > 0 for p in progress), progress
 
 
 def test_graph_serve_before_first_publish_fails_loudly(
