@@ -21,7 +21,9 @@ Scale notes: dim lookups are projections over literals, so a
 micro-batch runs no dim job (a hot model swap, ST7, re-reads the centers
 per micro-batch in foreachBatch); windowed aggs
 keep state bounded by the watermark; session_window state is bounded by
-gap + watermark. No Python in any hot path.
+gap + watermark. No plan has a Python eval node; the only Python on the
+per-batch path is the serving store's driver-side Arrow write of each
+epoch's partials (O(seconds x sources) rows).
 """
 
 from __future__ import annotations

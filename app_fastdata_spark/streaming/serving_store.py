@@ -8,6 +8,13 @@ streaming state, and appended to a day-partitioned parquet store as
 PARTIAL counts. `count` is decomposable and every serving read
 re-aggregates, so the partials of a (second, src) key sum to its total.
 
+An epoch's write is one Spark job with one task: the batch is counted in
+a single partition (no shuffle), and the partials, one row per distinct
+(second, src) pair of the batch, are collected to the driver as Arrow
+and written per day with pyarrow. No Hadoop committer and no staging
+directory are involved; the row count is O(seconds x sources) and never
+exceeds the batch's.
+
 Layout, per day:
 
     day=D/part-D-e<epoch>.parquet        one micro-batch's partial counts
@@ -19,21 +26,22 @@ stream commit publishes a delta naming the one file its epoch added;
 every SNAPSHOT_EVERY-th version, and every compaction, is a snapshot of
 the day's whole file set, so a commit writes one small file whatever the
 store's history, and resolving a day reads at most SNAPSHOT_EVERY
-versions (the shape of Spark's file-sink `_spark_metadata` log). A
-version becomes visible by an atomic rename, so a reader resolves the
-latest version of each day it needs and reads exactly the files listed:
-never a half-written or uncommitted file. (It scans the day directories
-filtered on file name, which carries the day and so is unique in the
-store: planning lists one directory per day, never one path per file.)
-Files are named by epoch, so a
-replayed epoch rewrites the same file and is committed once: an epoch at
-or below the day's last committed one is skipped, as the file sink skips
-a committed batch id.
+versions (the shape of Spark's file-sink `_spark_metadata` log). Data
+files and versions become visible by an atomic rename from a
+dot-prefixed temp name, so a reader resolves the latest version of each
+day it needs and reads exactly the files listed: never a half-written or
+uncommitted file. (It scans the day directories filtered on file name,
+which carries the day and so is unique in the store: planning lists one
+directory per day, never one path per file.) Files are named by epoch,
+so a replayed epoch rewrites the same file and is committed once: an
+epoch at or below the day's last committed one is skipped, as the file
+sink skips a committed batch id.
 
-Manifest and staging directories are underscore-prefixed, so a raw
-`spark.read.parquet(store)` does not see them. It does see every data
-file in a day directory: the stream only adds files, so the raw read
-sums to the stored events; after a compaction it also sees the
+The manifest directory is underscore-prefixed, and temp files are
+dot-prefixed, so a raw `spark.read.parquet(store)` does not see them
+(nor a compaction's `_staging` directory while it runs). It does see
+every data file in a day directory: the stream only adds files, so the
+raw read sums to the stored events; after a compaction it also sees the
 superseded files until their grace period ends, and only the manifest
 reader is exact.
 
@@ -54,6 +62,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +84,15 @@ STORE_SCHEMA = T.StructType(
         T.StructField("src", T.LongType()),
         T.StructField("count_values", T.LongType()),
         T.StructField("day", T.DateType()),
+    ]
+)
+# An epoch file's columns as the driver writes them: microsecond UTC
+# instants and 64-bit counts, which a raw read infers as STORE_SCHEMA.
+ARROW_SCHEMA = pa.schema(
+    [
+        ("second_ts", pa.timestamp("us", tz="UTC")),
+        ("src", pa.int64()),
+        ("count_values", pa.int64()),
     ]
 )
 
@@ -165,38 +183,50 @@ def start_per_second_store(
     events: DataFrame, store_path: str, available_now: bool = True
 ):
     """Maintain the A4 view in the store as per-epoch partial counts (see
-    module note). A micro-batch runs one aggregate-and-write: its counts
-    go to a staging directory, one file per day; each file is renamed to
-    `day=D/part-D-e<epoch>.parquet` and committed to that day's log.
+    module note). A micro-batch runs one Spark job with one task: its
+    events are counted per (second, src) in one partition, with no
+    shuffle, and the partials are collected to the driver as Arrow. They
+    are bounded by the batch's distinct (second, src) pairs, i.e.
+    O(seconds x sources), never more than its rows. Each day's slice is
+    written with pyarrow to a dot-prefixed temp file in `day=D/`, renamed
+    to `day=D/part-D-e<epoch>.parquet` and committed to that day's log.
     available_now=False runs continuously at the demo's 1-second cadence
     (voltdb-dashboard.js:50-53) — the mode whose freshness perfbench's
     `stream` workload measures."""
 
     def write_epoch(batch: DataFrame, epoch: int) -> None:
-        staging = os.path.join(store_path, STAGING, str(epoch))
-        # coalesce(1): one file per (day, epoch); a batch's partials are
-        # O(seconds x sources), not O(events)
-        count_by_second(batch).withColumn(
-            "day", F.date_format("second_ts", "yyyy-MM-dd")
-        ).coalesce(1).write.mode("overwrite").partitionBy("day").parquet(staging)
-        for part in sorted(os.listdir(staging)):
-            if not part.startswith("day="):
-                continue
-            day = part[len("day="):]
-            (staged,) = _parquet_files(os.path.join(staging, part))
+        # imported here: the catalog imports this module in every process
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        # coalesce(1): a single-partition input satisfies the aggregate's
+        # distribution, so no Exchange is planned (AQE is off inside
+        # foreachBatch and would not fold one)
+        parts = (
+            count_by_second(batch.coalesce(1))
+            .withColumn("day", F.date_format("second_ts", "yyyy-MM-dd"))
+            .toArrow()
+        )
+        for day in parts["day"].unique().to_pylist():
+            part = parts.filter(pc.equal(parts["day"], day)).select(ARROW_SCHEMA.names)
             with _locked_day_log(store_path, day) as log:
                 if epoch <= log.epoch:
                     continue  # a replay of a committed epoch
                 name = f"part-{day}-e{epoch:012d}.parquet"
-                os.replace(staged, os.path.join(log.dir, name))
+                tmp = os.path.join(log.dir, "." + name)
+                pq.write_table(part.cast(ARROW_SCHEMA), tmp)
+                os.replace(tmp, os.path.join(log.dir, name))
                 log.commit_epoch(name, epoch)
-        shutil.rmtree(staging)
 
-    # The watermark drops nothing in this stateless query (late events
-    # are counted, as NewEvent counts every insert); it makes the
-    # progress records carry eventTime, which the freshness figures read.
-    writer = events.withWatermark("ts", RETENTION).writeStream.foreachBatch(
-        write_epoch
+    # Only the columns the store reads: the enrichment projections above
+    # drop out of every micro-batch's plan (their filters stay). The
+    # watermark drops nothing in this stateless query (late events are
+    # counted, as NewEvent counts every insert); it makes the progress
+    # records carry eventTime, which the freshness figures read.
+    writer = (
+        events.select("ts", "user_id")
+        .withWatermark("ts", RETENTION)
+        .writeStream.foreachBatch(write_epoch)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

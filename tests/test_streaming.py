@@ -645,6 +645,89 @@ def test_store_path_sets_no_session_conf(spark, sf_dir, tmp_path, monkeypatch):
     assert S.committed_files(store)
 
 
+def test_store_runs_one_job_per_micro_batch(spark, sf_dir, tmp_path):
+    """Each store micro-batch is one Spark job: the batch is counted in
+    one partition and its partials are written from the driver, so no
+    shuffle stage and no separate write job runs."""
+    import shutil
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    src = tmp_path / "src"
+    src.mkdir()
+    preds = [F.col("event_id") % 3 == r for r in range(3)]
+    for i, f in enumerate(_raw_event_files(spark, sf_dir, tmp_path, preds)):
+        shutil.copy(f, src / f"{i}.parquet")
+    q = S.start_per_second_store(_file_stream(spark, sf_dir, src), str(tmp_path / "store"))
+    q.awaitTermination()
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 3
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(batches), sorted(jobs)
+
+
+def test_store_empty_batch_commits_nothing_and_leaves_no_stray_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A micro-batch with no rows commits nothing and creates no day
+    directory; after runs with input the store tree holds only committed
+    data files, manifest versions and lock files (no staging directory,
+    no temp file)."""
+    import os
+    import shutil
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    preds = [F.lit(False), F.col("event_id") % 2 == 0, F.lit(False), F.col("event_id") % 2 == 1]
+    files = _raw_event_files(spark, sf_dir, tmp_path, preds)
+    src = tmp_path / "src"
+    src.mkdir()
+    store = str(tmp_path / "store")
+    _pin_checkpoint(monkeypatch, tmp_path / "ckpt")
+
+    def run_stream(i):
+        shutil.copy(files[i], src / f"{i}.parquet")
+        q = S.start_per_second_store(_file_stream(spark, sf_dir, src), store)
+        q.awaitTermination()
+        return [p["numInputRows"] for p in q.recentProgress]
+
+    assert run_stream(0) == [0]
+    assert not os.path.exists(store) or os.listdir(store) == []
+    assert S.committed_files(store) == []
+    for i in range(1, len(files)):
+        run_stream(i)
+
+    committed = set(S.committed_files(store))
+    assert committed
+    data = set()
+    for d, dirs, names in os.walk(store):
+        rel = os.path.relpath(d, store).split(os.sep)
+        if rel == ["."]:
+            assert names == [] and all(n.startswith("day=") for n in dirs)
+        elif len(rel) == 1:
+            assert dirs == [S.MANIFEST]
+            data |= {os.path.join(d, n) for n in names}
+        else:
+            assert rel[1] == S.MANIFEST and dirs == []
+            assert all(n == ".lock" or (n.endswith(".json") and n[0] != ".") for n in names)
+    assert data == committed
+
+
+def test_store_raw_read_schema(spark, sf_dir, tmp_path):
+    """A raw `spark.read.parquet(store)` with no schema infers the store
+    schema: UTC timestamps (not NTZ or nanoseconds), 64-bit counts and the
+    day partition as a date."""
+    from app_fastdata_spark.streaming import serving_store as S
+
+    store = str(tmp_path / "store")
+    S.start_per_second_store(P.events_stream(spark, sf_dir), store).awaitTermination()
+    raw = spark.read.parquet(store)
+    assert raw.schema.simpleString() == (
+        "struct<second_ts:timestamp,src:bigint,count_values:bigint,day:date>"
+    )
+    assert raw.schema == S.STORE_SCHEMA
+
+
 def test_quality_gate_stream_matches_batch(spark, sf_dir, tmp_path):
     """The streaming curation gate equals the batch doc_quality filter —
     same rows, same metric values (stateless projection parity)."""
