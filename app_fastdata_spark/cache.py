@@ -1,15 +1,20 @@
 """Session-scoped materialization caches for derived artifacts.
 
-One pattern, many consumers: an expensive derived artifact (the kNN edge
-list, the MinHash-LSH candidate pair list, the graph-walk output, a
-centroid/codebook broadcast) is computed AT MOST ONCE per (Spark app,
-input directory, input file version) and every consumer shares the
-result. At 100 TB these artifacts are the things a pipeline builds once
-and STORES next to the corpus (the index directory of a vector store,
-the candidate file of a dedup run); the in-session dict is the local
-stand-in for that store, and ``file_stamp`` is its version key — an
-in-place rewrite or append of the source parquet changes the stamp, so
-the cache re-derives instead of serving stale state.
+The rule: a store holds an INDEX or MODEL — the kNN edge list, the
+MinHash-LSH candidate pair list, a centroid/codebook broadcast, a
+per-doc shingle table — never a registered query's result. Every query
+recomputes its answer over the stored indexes on each call; consumers
+that read one intermediate several times materialize it inside that one
+call, never across calls.
+
+An index is computed AT MOST ONCE per (Spark app, input directory,
+input file version) and every consumer shares it. At 100 TB these are
+the artifacts a pipeline builds once and STORES next to the corpus (the
+index directory of a vector store, the candidate file of a dedup run);
+the in-session dict is the local stand-in for that store, and
+``file_stamp`` is its version key — an in-place rewrite or append of
+the source parquet changes the stamp, so the cache re-derives instead
+of serving stale state.
 
 Eviction (the r11 ADVICE item): on every insert a store drops
 (a) superseded stamps of the same (app, sf_dir) — a rewrite loop cannot

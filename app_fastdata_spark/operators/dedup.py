@@ -792,8 +792,10 @@ def lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered entry: the cached pair list (see lsh_pairs)."""
-    return lsh_pairs(spark, sf_dir)
+    """Registered entry: the candidate pair list, built afresh on every
+    call — the query whose output IS the stored lsh_pairs index, so
+    serving the index here would time a read of its own result."""
+    return _minhash_lsh_frame(spark, sf_dir)
 
 
 _SQL_MINHASH_SIG = ", ".join(
@@ -857,70 +859,6 @@ def lev_prefix_col(col: Column | None = None) -> Column:
     )
 
 
-def _lev_scored_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized (doc_a, doc_b, lev, sim) over ALL LSH
-    candidate pairs (unthresholded, UNORDERED) — one DP execution per
-    (session, documents stamp). Each dedup_edit_distance invocation
-    previously re-ran the two eager localCheckpoint jobs (prefix
-    projection + DP scoring) at DataFrame-BUILD time, so the bench's
-    min-of-2 paid the refine twice (~1.5 s/invocation warm at sf0.1
-    for a few-hundred-row pair set — pure fixed overhead)."""
-
-    def build():
-        pairs = lsh_pairs(spark, sf_dir)
-        pair_ids = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        # localCheckpoint: materialize the candidate docs' ASCII
-        # prefixes ONCE (r13 stage profile: the uncheckpointed frame fed
-        # BOTH join sides, so Catalyst duplicated the whole semi-join +
-        # regex subtree — two sequential ~0.7 s single-task regex
-        # stages, plus the pair-id distinct built twice). At 100 TB this
-        # frame IS the refine input a dedup pipeline materializes:
-        # candidate-bounded rows of ≤LEV_PREFIX ASCII chars, never the
-        # corpus.
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .join(F.broadcast(pair_ids), "doc_id", "left_semi")
-            .filter(F.col("text").isNotNull())
-            .select("doc_id", lev_prefix_col().alias("pfx"))
-            .localCheckpoint()
-        )
-        a = docs.select(
-            F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pa")
-        )
-        b = docs.select(
-            F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pb")
-        )
-        lev = F.levenshtein(F.col("pa"), F.col("pb"))
-        sim = F.round(
-            F.lit(1.0)
-            - lev / F.greatest(F.length("pa"), F.length("pb"), F.lit(1)),
-            6,
-        )
-        # Score in ONE Project over a materialized pair frame:
-        # previously the sim >= threshold filter was inlined into the
-        # join condition, so the LEV_PREFIX² DP ran once in the join
-        # probe and again in the output projection — 2× per candidate
-        # pair. Here the DP runs exactly once per pair (lev and sim
-        # share the subexpression inside a single Project); the
-        # threshold filter reads the materialized column.
-        return (
-            pairs.join(a, "doc_a")
-            .join(b, "doc_b")
-            .select("doc_a", "doc_b", lev.alias("lev"), sim.alias("sim"))
-            .localCheckpoint()
-        )
-
-    from ..cache import session_get, stamp_key
-
-    return session_get(
-        "lev_scored", stamp_key(spark, sf_dir, "documents"), build
-    )
-
-
 def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, lev, sim) — Levenshtein refine of the MinHash-LSH
     candidate pairs on the ASCII-projected LEV_PREFIX-char prefix;
@@ -928,14 +866,60 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rounded value so both engines keep the identical pair set.
 
     Scale shape: only docs that APPEAR in a candidate pair get the
-    ASCII projection — a broadcast semi-join on the (tiny, session-
-    materialized) pair id set prunes the corpus before the regex runs,
+    ASCII projection — a broadcast semi-join on the (tiny, stored
+    lsh_pairs) pair id set prunes the corpus before the regex runs,
     so the refine's scan work is candidate-bounded like its DP work
     (regexing 10⁹ docs to refine a few thousand pairs is the shape
     this operator exists to avoid). Values are unchanged: non-pair
-    docs never contribute a row."""
+    docs never contribute a row. Two eager localCheckpoint jobs
+    (prefix projection, DP scoring) run on every call."""
+    pairs = lsh_pairs(spark, sf_dir)
+    pair_ids = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    # localCheckpoint: materialize the candidate docs' ASCII
+    # prefixes ONCE (r13 stage profile: the uncheckpointed frame fed
+    # BOTH join sides, so Catalyst duplicated the whole semi-join +
+    # regex subtree — two sequential ~0.7 s single-task regex
+    # stages, plus the pair-id distinct built twice). At 100 TB this
+    # frame IS the refine input a dedup pipeline materializes:
+    # candidate-bounded rows of ≤LEV_PREFIX ASCII chars, never the
+    # corpus.
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .join(F.broadcast(pair_ids), "doc_id", "left_semi")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", lev_prefix_col().alias("pfx"))
+        .localCheckpoint()
+    )
+    a = docs.select(
+        F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pa")
+    )
+    b = docs.select(
+        F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pb")
+    )
+    lev = F.levenshtein(F.col("pa"), F.col("pb"))
+    sim = F.round(
+        F.lit(1.0)
+        - lev / F.greatest(F.length("pa"), F.length("pb"), F.lit(1)),
+        6,
+    )
+    # Score in ONE Project over a materialized pair frame:
+    # previously the sim >= threshold filter was inlined into the
+    # join condition, so the LEV_PREFIX² DP ran once in the join
+    # probe and again in the output projection — 2× per candidate
+    # pair. Here the DP runs exactly once per pair (lev and sim
+    # share the subexpression inside a single Project); the
+    # threshold filter reads the materialized column, since an
+    # unmaterialized one would be pushed below the Project and run
+    # the DP again.
     return (
-        _lev_scored_frame(spark, sf_dir)
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select("doc_a", "doc_b", lev.alias("lev"), sim.alias("sim"))
+        .localCheckpoint()
         .filter(F.col("sim") >= LEV_SIM_MIN)
         .orderBy("doc_a", "doc_b")
     )
@@ -1553,30 +1537,20 @@ def capped_pair_sizes_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs_from_inv(inv)
 
 
-def _capped_jaccard_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, shared, jaccard_lb) over the skew-capped pair
+    source: the default pair source of connected components, both
+    survivor variants, PageRank, triangle stats and the e2e pipeline.
+    Bounded by the stop-shingle cap; at 100 TB this IS the candidate
+    file of the dedup run. Nothing stores it: each call re-runs the
+    shingle→inverted-index→bucket-pair chain, and a consumer that reads
+    the list more than once materializes it inside its own call."""
     unpacked = capped_pair_sizes(spark, sf_dir)
     jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
     return (
         unpacked.withColumn("jaccard_lb", F.round(jac, 6))
         .filter(F.col("jaccard_lb") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "shared", "jaccard_lb")
-    )
-
-
-def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized (the lsh_pairs/knn_edges precedent): the
-    capped near-dup pair list is the default pair source of SIX
-    downstream consumers (connected components, both survivor variants,
-    PageRank, triangle stats, the e2e pipeline), each of which re-ran
-    the shingle→inverted-index→bucket-pair chain to get a few-hundred-
-    row thresholded pair list. Bounded by the stop-shingle cap; at
-    100 TB this IS the stored candidate file of the dedup run."""
-    from ..cache import session_get, stamp_key
-
-    return session_get(
-        "capped_jaccard",
-        stamp_key(spark, sf_dir, "documents"),
-        lambda: _capped_jaccard_frame(spark, sf_dir).localCheckpoint(),
     )
 
 
@@ -1776,7 +1750,13 @@ def dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     centrality inside duplicate clusters (the canonical-representative
     picker: highest-rank doc is the cluster's best-connected copy).
     Executes as 3 unrolled join+agg rounds over a cached edge list."""
-    pairs = dedup_ngram_jaccard_capped(spark, sf_dir).select("doc_a", "doc_b")
+    # materialized once: both sides of the symmetric union read it, and
+    # Spark does not reuse the pair chain's exchanges across them
+    pairs = (
+        dedup_ngram_jaccard_capped(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .localCheckpoint()
+    )
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("src", "dst")

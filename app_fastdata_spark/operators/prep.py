@@ -497,10 +497,10 @@ def _two_merges(
     """The unrolled two-iteration trainer core: (m1, m2) as 1-row
     (l, r, c) frames, iteration 2 depending on iteration 1's winner
     through a 1-row broadcast. Session-materialized (the lsh_pairs
-    precedent): the TRAINED MERGES are the model artifact both
-    bpe_train_merges and bpe_compression consume, and each call was
-    re-running the vocab-sized two-aggregation trainer; two 1-row
-    checkpoints are the cheapest store in the repo."""
+    precedent): the TRAINED MERGES are the model artifact
+    bpe_compression applies, stored as two 1-row checkpoints so the
+    vocab-sized two-aggregation trainer runs once per documents stamp.
+    bpe_train_merges, whose output IS this model, trains afresh."""
     from ..cache import session_get, stamp_key
 
     return session_get(
@@ -547,8 +547,10 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast of the winning merge (plan cost independent of
     corpus size beyond the initial word count). A k-merge trainer is a
     driver loop over this step — the two-iteration unroll is the
-    oracle-checkable witness that iterations compose."""
-    m1, m2 = _two_merges(spark, sf_dir)
+    oracle-checkable witness that iterations compose. The merges it
+    returns ARE the stored bpe_two_merges model, so it trains them
+    afresh on every call rather than read that store."""
+    m1, m2 = _two_merges_frames(spark, sf_dir)
     out = lambda rank, m: m.select(  # noqa: E731
         F.lit(rank).alias("merge_rank"),
         F.col("l").alias("pair_left"),

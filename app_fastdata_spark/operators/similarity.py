@@ -224,22 +224,6 @@ _TOPK_SQL = f"""
 register("sim_topk_cosine", sql=_TOPK_SQL)(sim_topk_cosine)
 
 
-def exact_topk_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized output of the exact brute-force top-k — the
-    ground-truth baseline every ANN recall twin joins against. Seven
-    recall queries each re-ran the full Q·N fold scan to get the same
-    ≤Q·TOP_K-row frame (r13 profile: ~0.7 s per consumer at sf0.1);
-    like graph_walk_result, one execution per (session, embeddings
-    stamp) now serves them all. The registered sim_topk_cosine query
-    itself still computes fresh on every call — it IS the brute-force
-    benchmark entry, so its bench time must stay a real scan."""
-    return session_get(
-        "exact_topk",
-        stamp_key(spark, sf_dir, "embeddings"),
-        lambda: sim_topk_cosine(spark, sf_dir).localCheckpoint(),
-    )
-
-
 # --- embedding cosine near-dup (dedup family, oracle-checked) -------------
 
 NEAR_DUP_COSINE = 0.95
@@ -1308,39 +1292,21 @@ def inc_base_index(spark: SparkSession, sf_dir: str):
     )
 
 
-def _inc_insert_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized post-insert graph (UNORDERED) — the walk
-    stores' lifecycle (_walk_store) applied to the maintenance step:
-    one insert execution per (session, stamp). Each invocation previously
-    re-ran the whole delta pipeline eagerly (the delta localCheckpoint
-    fires at DataFrame-BUILD time), so the bench's min-of-2 paid the
-    arrival scoring twice (~1.7 s/run at sf0.1 for a 286-vector batch
-    whose cost is pure fixed overhead, not data)."""
-
-    def build():
-        edges, assign, probes, bc = inc_base_index(spark, sf_dir)
-        arrivals = load_vectors(spark, sf_dir, nonzero=True).filter(
-            _arrival_pred()
-        )
-        out, _, _ = knn_graph_insert_frame(
-            edges, assign, probes, arrivals, bc
-        )
-        return out.localCheckpoint()
-
-    return session_get(
-        "inc_insert", stamp_key(spark, sf_dir, "embeddings"), build
-    )
-
-
 def sim_knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, rank, neighbor_id, cos) — the kNN graph after the
     held-out arrivals (vec_id % 7 == 3) are INSERTED into the stored
-    base index, one maintenance step against the frozen base quantizer.
-    The oracle computes the same object the other way — a direct batch
-    build over the grown corpus with centroids/stride pinned to the
-    base subset — so a green row certifies the maintenance algebra
-    end-to-end across engines."""
-    return _inc_insert_result(spark, sf_dir).orderBy("vec_id", "rank")
+    base index, one maintenance step against the frozen base quantizer,
+    run in full on every call (the base index is the only stored
+    input). The oracle computes the same object the other way — a
+    direct batch build over the grown corpus with centroids/stride
+    pinned to the base subset — so a green row certifies the
+    maintenance algebra end-to-end across engines."""
+    edges, assign, probes, bc = inc_base_index(spark, sf_dir)
+    arrivals = load_vectors(spark, sf_dir, nonzero=True).filter(
+        _arrival_pred()
+    )
+    out, _, _ = knn_graph_insert_frame(edges, assign, probes, arrivals, bc)
+    return out.orderBy("vec_id", "rank")
 
 
 # The oracle is _KNN_SQL with ONE change: stride and centroid membership
@@ -1416,7 +1382,7 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs next to its latency numbers. Both sides are oracle-checked
     queries; the recall is a semi-match count over their K-row results,
     so the measurement itself carries a full oracle too."""
-    exact = exact_topk_result(spark, sf_dir).select("query_id", "neighbor_id")
+    exact = sim_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     approx = sim_ann_ivf(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
@@ -2294,7 +2260,7 @@ def sim_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     as sim_ann_recall does for the IVF probe path. Both sides are
     themselves oracle-checked queries; the measurement is a semi-match
     count over their K-row results, so it carries a full oracle too."""
-    exact = exact_topk_result(spark, sf_dir).select("query_id", "neighbor_id")
+    exact = sim_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     approx = sim_ann_pq(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
@@ -2595,7 +2561,7 @@ def sim_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     losses combined), next to the per-mechanism recalls
     (sim_ann_recall for the probe path, sim_ann_pq_recall for the
     codebook)."""
-    exact = exact_topk_result(spark, sf_dir).select("query_id", "neighbor_id")
+    exact = sim_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     approx = sim_ann_ivfpq(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
@@ -2956,50 +2922,21 @@ def graph_walk_frame(
     return best_visit(graph_search(queries, edges, en, 1)).drop("seed")
 
 
-def _walk_store(spark: SparkSession, sf_dir: str, store: str) -> DataFrame:
-    """Session-materialized output of the corpus-query walk
-    configuration `store` names (_WALKS), UNORDERED: one execution per
-    (session, embeddings stamp), shared by the registered query and its
-    recall twin. A greedy configuration without a trace stores its
-    best_visit (≤ N_QUERIES rows); the others store the visited set.
-    Same lifecycle as knn_edges (cache.session_get keyed on the
-    embeddings stamp)."""
-    edges, seeds, beam, trace = _WALKS[store]
-
-    def build():
-        queries = query_frame(
-            load_table(spark, sf_dir, "embeddings").filter(
-                F.col("vec_id") < N_QUERIES
-            )
+def _corpus_walk_inputs(
+    spark: SparkSession, sf_dir: str, index
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(queries, edges, en) of a registered walk: the corpus query set
+    (vec_id < N_QUERIES), the (vec_id, neighbor_id) list of the stored
+    edge index `index` builds, and the corpus — graph_search's first
+    three arguments. Every walk query and recall twin searches afresh
+    on each call; only the edge index is stored."""
+    queries = query_frame(
+        load_table(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") < N_QUERIES
         )
-        out = graph_search(
-            queries,
-            edges(spark, sf_dir).select("vec_id", "neighbor_id"),
-            corpus_frame(spark, sf_dir),
-            seeds,
-            beam=beam,
-            trace=trace,
-        )
-        if not (beam or trace):
-            out = best_visit(out)
-        return out.localCheckpoint()
-
-    return session_get(store, stamp_key(spark, sf_dir, "embeddings"), build)
-
-
-def graph_walk_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized terminal state of the single-entry walk —
-    (query_id, best_id, cos_graph, n_hops), UNORDERED — derived from the
-    stored trace, so one walk execution per (session, stamp) serves
-    sim_ann_graph, its recall twin and the top-k read."""
-
-    def build():
-        trace = _walk_store(spark, sf_dir, "graph_walk_trace")
-        return best_visit(trace).drop("seed").localCheckpoint()
-
-    return session_get(
-        "graph_walk", stamp_key(spark, sf_dir, "embeddings"), build
     )
+    edges = index(spark, sf_dir).select("vec_id", "neighbor_id")
+    return queries, edges, corpus_frame(spark, sf_dir)
 
 
 def _recall_at_1(
@@ -3007,11 +2944,11 @@ def _recall_at_1(
 ) -> DataFrame:
     """(query_id, graph_best, exact_best, hit, cos_gap) of a search's
     best answer `best` (query_id, best_id, cos_graph) against the exact
-    top-1 (exact_topk_result rank 1). The gap subtracts two values
+    top-1 (sim_topk_cosine rank 1). The gap subtracts two values
     already on the shared 9-dp grid and re-rounds to absorb
     representation noise."""
     exact = (
-        exact_topk_result(spark, sf_dir)
+        sim_topk_cosine(spark, sf_dir)
         .filter(F.col("rank") == 1)
         .select(
             "query_id",
@@ -3037,10 +2974,11 @@ def _recall_at_1(
 def sim_ann_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, best_id, cos_graph, n_hops) — the greedy best-first
     local optimum each query reaches on the kNN graph, with the hop
-    count it took. Uses the session-materialized edges (knn_edges) and
-    walk output (graph_walk_result), so after any other graph consumer
-    this is pure serving work."""
-    return graph_walk_result(spark, sf_dir).orderBy("query_id")
+    count it took. Walks the stored edge index (knn_edges) afresh on
+    every call."""
+    return graph_walk_frame(
+        *_corpus_walk_inputs(spark, sf_dir, knn_edges)
+    ).orderBy("query_id")
 
 
 def _sql_graph_step_cos(nv: str, nn: str) -> str:
@@ -3166,9 +3104,13 @@ def sim_ann_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits in cosine when it is not: the quality number that decides
     whether a single graph entry point suffices or the deployment needs
     beam width / multiple seeds. Completes the recall family
-    (probe path / codebook / composition / graph). Reads the
-    session-materialized walk output instead of re-running the walk."""
-    return _recall_at_1(spark, sf_dir, graph_walk_result(spark, sf_dir))
+    (probe path / codebook / composition / graph). Runs its own walk
+    and exact top-k on every call."""
+    return _recall_at_1(
+        spark,
+        sf_dir,
+        graph_walk_frame(*_corpus_walk_inputs(spark, sf_dir, knn_edges)),
+    )
 
 
 register("sim_ann_graph_recall", sql=_recall_sql(_GRAPH_SQL, "x"))(
@@ -3206,9 +3148,13 @@ def sim_ann_graph_multiseed(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimum across GRAPH_SEEDS independent greedy walks per query; seed
     is the 1-based rank of the winning entry point. Ties across seeds
     resolve by (cos DESC, node ASC, n_hops ASC, seed ASC) on both
-    engines. Runs over the same session-materialized edge list as the
-    single-seed walk; per-hop cost is Q·S·K candidate scores."""
-    return _walk_store(spark, sf_dir, "multiseed_walk").orderBy("query_id")
+    engines. Runs over the same stored edge list as the single-seed
+    walk; per-hop cost is Q·S·K candidate scores."""
+    return best_visit(
+        graph_search(
+            *_corpus_walk_inputs(spark, sf_dir, knn_edges), GRAPH_SEEDS
+        )
+    ).orderBy("query_id")
 
 
 _GRAPH_MULTI_SQL = f"""{_graph_walk_sql(_KNN_SQL, GRAPH_SEEDS)}
@@ -3226,12 +3172,14 @@ def sim_ann_graph_multiseed_recall(
     """(query_id, graph_best, exact_best, hit, cos_gap) — recall@1 of
     the multi-seed walk against the exact optimum: the adjudication
     artifact for the entry-point question (see the section note above
-    for the measured single- vs multi-seed numbers). Reads the
-    session-materialized walk output instead of re-running the S
-    walks."""
-    return _recall_at_1(
-        spark, sf_dir, _walk_store(spark, sf_dir, "multiseed_walk")
+    for the measured single- vs multi-seed numbers). Runs its own S
+    walks on every call."""
+    walk = best_visit(
+        graph_search(
+            *_corpus_walk_inputs(spark, sf_dir, knn_edges), GRAPH_SEEDS
+        )
     )
+    return _recall_at_1(spark, sf_dir, walk)
 
 
 register(
@@ -3259,7 +3207,9 @@ def sim_ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-result serving answer of the graph search. rank 1 always equals
     sim_ann_graph's terminal node (cos strictly improves along the
     walk, so the last node is the trace argmax) — pinned by test."""
-    trace = _walk_store(spark, sf_dir, "graph_walk_trace")
+    trace = graph_search(
+        *_corpus_walk_inputs(spark, sf_dir, knn_edges), 1, trace=True
+    )
     return top_visits(trace, GRAPH_TOPK).orderBy("query_id", "rank")
 
 
@@ -3431,7 +3381,11 @@ def sim_ann_graph_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the section note's sweep table). The reference anchor is unchanged:
     the walk is the serving analogue of NewEvent.java:62-69's argmin
     over centroids, upgraded to a stored navigable index."""
-    return _walk_store(spark, sf_dir, "hd_walk").orderBy("query_id")
+    return best_visit(
+        graph_search(
+            *_corpus_walk_inputs(spark, sf_dir, knn_edges_hd), HD_SEEDS
+        )
+    ).orderBy("query_id")
 
 
 # The hd edge-list statement, nestable as a `knn` CTE: the K=32 IVF
@@ -3486,9 +3440,14 @@ register("sim_ann_graph_hd", sql=_GRAPH_HD_SQL)(sim_ann_graph_hd)
 def sim_ann_graph_hd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, graph_best, exact_best, hit, cos_gap) — recall@1 of
     the high-degree multi-seed walk against the exact optimum: the
-    artifact that certifies the ≥0.9 deployability bar. Reads the
-    session-materialized walk output."""
-    return _recall_at_1(spark, sf_dir, _walk_store(spark, sf_dir, "hd_walk"))
+    artifact that certifies the ≥0.9 deployability bar. Runs its own
+    walks on every call."""
+    walk = best_visit(
+        graph_search(
+            *_corpus_walk_inputs(spark, sf_dir, knn_edges_hd), HD_SEEDS
+        )
+    )
+    return _recall_at_1(spark, sf_dir, walk)
 
 
 register(
@@ -3529,23 +3488,6 @@ register(
 BEAM_WIDTH = 8
 BEAM_TOPK = 5
 
-# The batch walk configurations by store name: (edge list, seeds, beam,
-# trace). Each registered walk query and its recall twin read one.
-_WALKS = {
-    "graph_walk_trace": (knn_edges, 1, False, True),
-    "multiseed_walk": (knn_edges, GRAPH_SEEDS, False, False),
-    "hd_walk": (knn_edges_hd, HD_SEEDS, False, False),
-    "beam_visited": (knn_edges_hd, BEAM_WIDTH, True, False),
-}
-
-
-def beam_visited_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized visited set of the beam search over the
-    high-degree graph — (query_id, node, cos), one row per explored
-    candidate (≤ BEAM_WIDTH·(GRAPH_MAX_HOPS+1) per query)."""
-    return _walk_store(spark, sf_dir, "beam_visited")
-
-
 def sim_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, rank, neighbor_id, cos) — the BEAM_TOPK best
     candidates beam search explored per query: the k-result serving
@@ -3553,7 +3495,11 @@ def sim_ann_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     best local optimum; with the frontier as wide as the hd walk's
     seed fan it matches or beats the greedy family's candidate quality
     at the same per-hop cost order (Q·W·K vs Q·S·K scores)."""
-    visited = beam_visited_result(spark, sf_dir)
+    visited = graph_search(
+        *_corpus_walk_inputs(spark, sf_dir, knn_edges_hd),
+        BEAM_WIDTH,
+        beam=True,
+    )
     return top_visits(visited, BEAM_TOPK).orderBy("query_id", "rank")
 
 
@@ -3638,7 +3584,12 @@ def sim_ann_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the beam search against the exact optimum, completing the width
     adjudication triad: single-seed greedy → multi-seed greedy →
     shared-frontier beam, each over the same stored index family."""
-    best = top_visits(beam_visited_result(spark, sf_dir), 1).select(
+    visited = graph_search(
+        *_corpus_walk_inputs(spark, sf_dir, knn_edges_hd),
+        BEAM_WIDTH,
+        beam=True,
+    )
+    best = top_visits(visited, 1).select(
         "query_id",
         F.col("neighbor_id").alias("best_id"),
         F.col("cos").alias("cos_graph"),

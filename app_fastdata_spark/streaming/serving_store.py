@@ -39,7 +39,8 @@ sink skips a committed batch id.
 
 The manifest directory is underscore-prefixed, and temp files are
 dot-prefixed, so a raw `spark.read.parquet(store)` does not see them
-(nor a compaction's `_staging` directory while it runs). It does see
+(nor a compaction's `_compact-*` directory inside a day directory
+while it runs). It does see
 every data file in a day directory: the stream only adds files, so the
 raw read sums to the stored events; after a compaction it also sees the
 superseded files until their grace period ends, and only the manifest
@@ -70,7 +71,6 @@ from pyspark.sql import functions as F
 from .pipeline import RETENTION, count_by_second
 
 MANIFEST = "_manifest"
-STAGING = "_staging"
 # A day's log replays at most this many versions from its last snapshot.
 SNAPSHOT_EVERY = 32
 # Seconds a file superseded by compaction stays on disk: longer than any
@@ -397,7 +397,9 @@ def compact_store_partition(
         raise FileNotFoundError(inputs.log)
     staging = None
     if len(inputs.files) > target_files:
-        staging = os.path.join(store_path, STAGING, f"compact-{uuid.uuid4().hex}")
+        # staged inside the day directory, underscore-prefixed so no
+        # reader lists it, and removed with the day by retention
+        staging = os.path.join(inputs.dir, f"_compact-{uuid.uuid4().hex}")
         (
             _read_files(spark, store_path, [inputs])
             .groupBy("second_ts", "src")

@@ -18,25 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from app_fastdata_spark.cache import session_clear
 from app_fastdata_spark.catalog import queries
 from app_fastdata_spark.session import get_spark
-
-# Queries whose registered builder returns a session-memoized frame of
-# their OWN output (the stored-artifact lifecycle: the scored pair list /
-# post-insert graph a deployment would persist). Left alone, the memo
-# would let the min-of-2 timing serve a cached result on run 2 — the r13
-# verdict flagged exactly that as result caching. The bench therefore
-# clears these stores before EVERY timed run, so each timed execution
-# pays the query's real serving computation. Upstream INDEX artifacts
-# (the LSH pair store, the frozen base graph, the shingle table) are
-# deliberately NOT cleared: they are the stored inputs a cold serving
-# process reads, and their build cost is visible in the cold totals.
-RESULT_MEMO_STORES = {
-    "dedup_edit_distance": ("lev_scored",),
-    "dedup_ngram_jaccard_capped": ("capped_jaccard",),
-    "sim_knn_graph_incremental": ("inc_insert",),
-}
 
 # Headliners: the reference serving loop (SURVEY.md §3.2), the ingest-path
 # operators, the TPC-H-style analytics, and the pipeline extensions.
@@ -141,10 +124,9 @@ HEADLINE = [
     "sim_ann_ivfpq",
     "sim_semantic_survivors",
     "doc_quality_confusion",
-    # round-11 additions: greedy graph search over the materialized kNN
-    # edges — the serving read of the graph the three queries above
-    # build, so it benches right after them (cache-warm, as deployed) —
-    # and its recall@1 twin vs the exact optimum
+    # round-11 additions: greedy graph search over the stored kNN edge
+    # index the three queries above read, and its recall@1 twin vs the
+    # exact optimum (each call runs its own walk)
     "sim_ann_graph",
     "sim_ann_graph_recall",
     # round-11 addition: Levenshtein refine over the LSH candidates
@@ -157,7 +139,7 @@ HEADLINE = [
     "sim_ann_graph_multiseed",
     "sim_ann_graph_multiseed_recall",
     # round-12 late: k-result serving — top-k over the walk's visited
-    # trace (benches after the walk: cache-warm, as deployed)
+    # trace
     "sim_ann_graph_topk",
     # round-13 additions: the DEPLOYABLE graph-ANN configuration —
     # degree-32 NN-descent-refined graph searched with 16 seeds
@@ -166,8 +148,7 @@ HEADLINE = [
     "sim_ann_graph_hd_recall",
     # round-13 late: fully-oracled beam search (unrolled chained-CTE
     # oracle) over the hd graph — recall@1 1.00 at sf0.1 where 16
-    # greedy seeds measure 0.90; benches after the hd pair (shared
-    # stored index, as deployed)
+    # greedy seeds measure 0.90
     "sim_ann_graph_beam",
     "sim_ann_graph_beam_recall",
 ]
@@ -375,42 +356,31 @@ def cc_probes(spark, sf_dir: str) -> dict:
     }
 
 
-def main(argv: list[str] | None = None) -> None:
-    argv = sys.argv[1:] if argv is None else argv
-    names = select_queries(argv)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    load_before = sample_load()
-    spark = get_spark("bench")
+def time_queries(
+    spark, names: list[str], sf_dir: str, warm_dir: str, runs: int
+) -> dict[str, list[tuple[float, float]]]:
+    """The one warm-then-time loop: run every query once at
+    ``warm_dir``, then each query ``runs`` times at ``sf_dir`` into a
+    noop sink. Returns, per query in order, one (wall, plan build)
+    seconds pair per run: wall from the builder call to the end of the
+    write, plan build from the builder call to the DataFrame it returns.
+
+    The warm pass makes timings measure data-scale execution, not
+    one-time infrastructure: the first run of each plan pays
+    Janino/JIT compilation of its whole-stage-codegen pipeline and the
+    first touch of each table's file listing (measured 3.1s cold → 0.4s
+    warm for dedup_exact at sf0.1 — r2's "+83% regression" was exactly
+    this artifact: r2 reordered HEADLINE so dedup_exact became the
+    first documents-table query, absorbing the cold cost that r1
+    amortized elsewhere). Per-query warm numbers are comparable across
+    rounds regardless of ordering."""
     qs = queries()
-    timings: dict[str, float] = {}
-    # Warm EVERY timed query at sf0.001 so timings measure data-scale
-    # execution, not one-time infrastructure: the first run of each plan
-    # pays Janino/JIT compilation of its whole-stage-codegen pipeline and
-    # the first touch of each table's file listing (measured 3.1s cold →
-    # 0.4s warm for dedup_exact — r2's "+83% regression" was exactly this
-    # artifact: r2 reordered HEADLINE so dedup_exact became the first
-    # documents-table query, absorbing the cold cost that r1 amortized
-    # elsewhere). Per-query warm numbers are comparable across rounds
-    # regardless of ordering.
-    warm_dir = "/root/testdata/sf0.001"
     for w in names:
         qs[w](spark, warm_dir).write.format("noop").mode("overwrite").save()
-    # min-of-2 at the target SF: single-shot timings on a shared sandbox
-    # carry ±20% scheduler noise (measured: four identical-config bench
-    # runs spanned 28.5-33.5 s total); the minimum of two runs is the
-    # standard way to estimate the un-contended cost without inflating
-    # the suite much. runs_per_query is recorded in the output line.
-    RUNS = 2
-    timings_cold: dict[str, float] = {}
-    timings_build: dict[str, float] = {}
+    out: dict[str, list[tuple[float, float]]] = {}
     for name in names:
         per_run: list[tuple[float, float]] = []
-        for _ in range(RUNS):
-            # honesty gate (r13 verdict Next #1): a query must never
-            # serve its own memoized output inside the timed region
-            for store in RESULT_MEMO_STORES.get(name, ()):
-                session_clear(store)
+        for _ in range(runs):
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             t_built = time.time()
@@ -418,6 +388,30 @@ def main(argv: list[str] | None = None) -> None:
             # count, no driver collect overhead in the measurement).
             df.write.format("noop").mode("overwrite").save()
             per_run.append((time.time() - t0, t_built - t0))
+        out[name] = per_run
+    return out
+
+
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    names = select_queries(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    load_before = sample_load()
+    spark = get_spark("bench")
+    timings: dict[str, float] = {}
+    # min-of-2 at the target SF: single-shot timings on a shared sandbox
+    # carry ±20% scheduler noise (measured: four identical-config bench
+    # runs spanned 28.5-33.5 s total); the minimum of two runs is the
+    # standard way to estimate the un-contended cost without inflating
+    # the suite much. runs_per_query is recorded in the output line.
+    RUNS = 2
+    runs = time_queries(
+        spark, names, sf_dir, warm_dir="/root/testdata/sf0.001", runs=RUNS
+    )
+    timings_cold: dict[str, float] = {}
+    timings_build: dict[str, float] = {}
+    for name, per_run in runs.items():
         # warm headline number stays min-of-RUNS (same methodology as
         # every prior round), with the plan-build seconds of that same
         # run; the FIRST run is additionally recorded so the artifact

@@ -49,30 +49,6 @@ def test_compact_line_carries_cold_total():
     assert d["value"] == 123.456
 
 
-def test_result_memo_stores_name_real_headline_queries_and_stores():
-    """The bench clears each result-memoized query's output store before
-    every timed run (r13 verdict: a query must not serve its own cached
-    output inside the min-of-2). This test pins the coupling: every
-    mapped query benches, and every store name matches a session_get
-    store literal in the operator source — a silent store rename would
-    otherwise turn the honesty gate into a no-op."""
-    import inspect
-
-    from app_fastdata_spark.operators import dedup, similarity
-    from bench import RESULT_MEMO_STORES
-
-    src = inspect.getsource(dedup) + inspect.getsource(similarity)
-    assert set(RESULT_MEMO_STORES) == {
-        "dedup_edit_distance",
-        "dedup_ngram_jaccard_capped",
-        "sim_knn_graph_incremental",
-    }
-    for q, stores in RESULT_MEMO_STORES.items():
-        assert q in HEADLINE, q
-        for s in stores:
-            assert f'"{s}"' in src, (q, s)
-
-
 def test_compact_line_survives_pathological_registry():
     # 400 queries with 60-char names — far past any real registry; the
     # worst-list must self-truncate instead of overflowing

@@ -5,6 +5,7 @@ model-swap behavior, entry smoke).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -552,8 +553,8 @@ def test_components_chain_rides_capped_source(spark, tmp_path):
     still cluster (and are deduped to one survivor per cluster)."""
     from app_fastdata_spark.operators.dedup import (
         STOP_SHINGLE_CAP,
-        _capped_jaccard_frame,
         dedup_components,
+        dedup_ngram_jaccard_capped,
         dedup_survivors,
     )
 
@@ -577,11 +578,8 @@ def test_components_chain_rides_capped_source(spark, tmp_path):
     # cap in its optimized plan, so the 1210-doc stop-shingle bucket is
     # dropped before pair emission rather than exploding into ~731k
     # candidate pairs.
-    # inspect the RAW builder: the registered query serves the
-    # session-materialized checkpoint, whose plan is a LogicalRDD —
-    # the cap predicate lives in the plan that executes at BUILD time
     plan = (
-        _capped_jaccard_frame(spark, d)
+        dedup_ngram_jaccard_capped(spark, d)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -2382,7 +2380,10 @@ def test_graph_topk_ranks_the_visited_trace(spark, sf_dir):
     single-entry walk's terminal (node, cos) — cos strictly improves
     along the walk, so the last node IS the trace argmax; (b) carry
     contiguous ranks with non-increasing cos and distinct nodes per
-    query; (c) never exceed GRAPH_TOPK rows per query."""
+    query; (c) never exceed GRAPH_TOPK rows per query. And sim_ann_graph,
+    which walks without a trace, answers each query's max-hop row of
+    the walk trace."""
+    from app_fastdata_spark.operators import similarity as S
     from app_fastdata_spark.operators.similarity import (
         GRAPH_TOPK,
         sim_ann_graph,
@@ -2390,6 +2391,16 @@ def test_graph_topk_ranks_the_visited_trace(spark, sf_dir):
     )
 
     best = {r.query_id: r for r in sim_ann_graph(spark, sf_dir).collect()}
+    trace = S.graph_search(
+        *S._corpus_walk_inputs(spark, sf_dir, S.knn_edges), 1, trace=True
+    ).collect()
+    last: dict = {}
+    for r in trace:
+        if r.query_id not in last or r.n_hops > last[r.query_id].n_hops:
+            last[r.query_id] = r
+    assert {
+        (q, t.node, t.cos, t.n_hops) for q, t in last.items()
+    } == {(q, r.best_id, r.cos_graph, r.n_hops) for q, r in best.items()}
     by_q: dict = {}
     for r in sim_ann_graph_topk(spark, sf_dir).collect():
         by_q.setdefault(r.query_id, []).append(r)
@@ -2536,7 +2547,11 @@ def test_beam_search_structure_bounds_and_recall(spark, sf_dir):
     (measured 20/20 at sf0.01 AND sf0.1, vs the walk's 18/20)."""
     from app_fastdata_spark.operators import similarity as S
 
-    visited = S.beam_visited_result(spark, sf_dir).collect()
+    visited = S.graph_search(
+        *S._corpus_walk_inputs(spark, sf_dir, S.knn_edges_hd),
+        S.BEAM_WIDTH,
+        beam=True,
+    ).collect()
     per_q: dict = {}
     for r in visited:
         per_q.setdefault(r.query_id, set()).add(r.node)
@@ -2566,40 +2581,60 @@ def test_beam_search_structure_bounds_and_recall(spark, sf_dir):
     assert hits >= 0.9 * len(by_q), f"beam recall@1 {hits}/{len(by_q)}"
 
 
-def test_walk_result_derives_from_trace_single_execution(
-    spark, sf_dir, monkeypatch
-):
-    """One single-entry walk execution per (session, stamp) must serve
-    sim_ann_graph, its recall twin AND the top-k read: from cleared walk
-    stores the three queries together run _walk_loop exactly once, and
-    the terminal sim_ann_graph serves is each query's max-hop row of
-    the stored trace."""
-    from app_fastdata_spark.cache import session_clear
-    from app_fastdata_spark.operators import similarity as S
+# Registered queries, each with the kernel that computes its answer (for
+# the ANN recall twins, their exact baseline). A store holds an index or
+# model, never a query's result, so every call runs the kernel again.
+_SIM = "app_fastdata_spark.operators.similarity"
+_DEDUP = "app_fastdata_spark.operators.dedup"
+_RECOMPUTED = [
+    (q, _SIM, "graph_search")
+    for q in (
+        "sim_ann_graph",
+        "sim_ann_graph_recall",
+        "sim_ann_graph_topk",
+        "sim_ann_graph_multiseed",
+        "sim_ann_graph_multiseed_recall",
+        "sim_ann_graph_hd",
+        "sim_ann_graph_hd_recall",
+        "sim_ann_graph_beam",
+        "sim_ann_graph_beam_recall",
+    )
+] + [
+    (q, _SIM, "sim_topk_cosine")
+    for q in ("sim_ann_recall", "sim_ann_pq_recall", "sim_ann_ivfpq_recall")
+] + [
+    ("sim_knn_graph_incremental", _SIM, "knn_graph_insert_frame"),
+    ("dedup_ngram_jaccard_capped", _DEDUP, "capped_pair_sizes"),
+    ("dedup_minhash_lsh", _DEDUP, "_minhash_lsh_frame"),
+    ("dedup_edit_distance", "pyspark.sql.functions", "levenshtein"),
+    ("bpe_train_merges", "app_fastdata_spark.operators.prep", "_two_merges_frames"),
+]
 
-    session_clear("graph_walk")
-    session_clear("graph_walk_trace")
+
+@pytest.mark.parametrize(
+    "query,module,kernel", _RECOMPUTED, ids=[q for q, _, _ in _RECOMPUTED]
+)
+def test_query_recomputes_its_result_on_every_call(
+    spark, sf_dir, monkeypatch, query, module, kernel
+):
+    """Two calls of the query in one session run its kernel twice: no
+    store serves the second call the first call's answer."""
+    import importlib
+
+    from app_fastdata_spark.catalog import queries
+
+    mod = importlib.import_module(module)
+    real = getattr(mod, kernel)
     calls = []
-    real = S._walk_loop
 
     def counted(*a, **k):
         calls.append(1)
         return real(*a, **k)
 
-    monkeypatch.setattr(S, "_walk_loop", counted)
-    got = {tuple(r) for r in S.sim_ann_graph(spark, sf_dir).collect()}
-    assert S.sim_ann_graph_recall(spark, sf_dir).collect()
-    assert S.sim_ann_graph_topk(spark, sf_dir).collect()
-    trace = S._walk_store(spark, sf_dir, "graph_walk_trace").collect()
-    assert len(calls) == 1, f"{len(calls)} walk executions"
-    want = set()
-    by_q: dict = {}
-    for r in trace:
-        by_q.setdefault(r.query_id, []).append(r)
-    for qid, rows in by_q.items():
-        t = max(rows, key=lambda r: r.n_hops)
-        want.add((qid, t.node, t.cos, t.n_hops))
-    assert got == want and got
+    monkeypatch.setattr(mod, kernel, counted)
+    for _ in range(2):
+        queries()[query](spark, sf_dir).collect()
+    assert len(calls) == 2, f"{query}: {kernel} ran {len(calls)} times"
 
 
 def test_gemm_seam_auto_selects_by_row_count(spark, sf_dir, monkeypatch):

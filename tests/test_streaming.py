@@ -410,7 +410,9 @@ def test_serving_store_multibatch_upsert(spark, sf_dir, tmp_path):
 def test_serving_store_compaction(spark, sf_dir, tmp_path, monkeypatch):
     """Compaction folds a day's per-epoch files into one pre-summed file
     with identical re-aggregated contents; the superseded files stay on
-    disk until a later compaction after the grace period deletes them."""
+    disk until a later compaction after the grace period deletes them,
+    and then the tree holds only committed data, manifest and lock
+    files."""
     import os
 
     from app_fastdata_spark.streaming import serving_store as S
@@ -439,6 +441,31 @@ def test_serving_store_compaction(spark, sf_dir, tmp_path, monkeypatch):
     assert S.compact_store_partition(spark, store, day) == 1
     assert not any(os.path.exists(f) for f in before_files)
     assert _store_totals(spark, store) == before
+    # the fold leaves no staging directory behind, in the day or at the root
+    assert _store_data_files(store) == set(S.committed_files(store))
+
+
+def _store_data_files(store: str) -> set:
+    """The data files of a store tree, asserting the tree holds nothing
+    else: day directories of `part-*.parquet` files, each with a
+    manifest directory of `*.json` versions and `.lock` files."""
+    import os
+
+    from app_fastdata_spark.streaming import serving_store as S
+
+    data = set()
+    for d, dirs, names in os.walk(store):
+        rel = os.path.relpath(d, store).split(os.sep)
+        if rel == ["."]:
+            assert names == [] and all(n.startswith("day=") for n in dirs)
+        elif len(rel) == 1:
+            assert dirs == [S.MANIFEST]
+            assert all(n.startswith("part-") and n.endswith(".parquet") for n in names)
+            data |= {os.path.join(d, n) for n in names}
+        else:
+            assert rel[1] == S.MANIFEST and dirs == []
+            assert all(n == ".lock" or (n.endswith(".json") and n[0] != ".") for n in names)
+    return data
 
 
 def _pin_checkpoint(monkeypatch, checkpoint) -> None:
@@ -699,18 +726,7 @@ def test_store_empty_batch_commits_nothing_and_leaves_no_stray_files(
 
     committed = set(S.committed_files(store))
     assert committed
-    data = set()
-    for d, dirs, names in os.walk(store):
-        rel = os.path.relpath(d, store).split(os.sep)
-        if rel == ["."]:
-            assert names == [] and all(n.startswith("day=") for n in dirs)
-        elif len(rel) == 1:
-            assert dirs == [S.MANIFEST]
-            data |= {os.path.join(d, n) for n in names}
-        else:
-            assert rel[1] == S.MANIFEST and dirs == []
-            assert all(n == ".lock" or (n.endswith(".json") and n[0] != ".") for n in names)
-    assert data == committed
+    assert _store_data_files(store) == committed
 
 
 def test_store_raw_read_schema(spark, sf_dir, tmp_path):
@@ -1688,12 +1704,11 @@ def test_beam_search_sets_no_session_conf(
 ):
     """The beam loop must not flip session-global Spark conf (a flip is
     seen by every concurrent query of the session): building
-    sim_ann_graph_beam from a cleared beam_visited store and serving
+    sim_ann_graph_beam (which runs its beam on every call) and serving
     one beam_search_stream batch make no RuntimeConfig.set call at all,
     and the stream still answers exactly like the batch."""
     from pyspark.sql.conf import RuntimeConfig
 
-    from app_fastdata_spark.cache import session_clear
     from app_fastdata_spark.operators.similarity import (
         N_QUERIES,
         load_vectors,
@@ -1718,7 +1733,6 @@ def test_beam_search_sets_no_session_conf(
         return real(self, *a, **k)
 
     monkeypatch.setattr(RuntimeConfig, "set", recording)
-    session_clear("beam_visited")
     want = {tuple(r) for r in sim_ann_graph_beam(spark, sf_dir).collect()}
     out = str(tmp_path / "beam_serve")
     P.beam_search_stream(spark, sf_dir, stream, out).awaitTermination()

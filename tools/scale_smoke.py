@@ -31,7 +31,6 @@ import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -237,19 +236,16 @@ def main() -> None:
         "SPARK_GRAFT_INDEX_DIR", os.path.join(scratch, "index")
     )
     spark = get_spark("scale_smoke")
-    from app_fastdata_spark.catalog import queries
+    from bench import time_queries
 
-    qs = queries()
     results: dict[str, dict[int, float]] = {q: {} for q in QUERIES}
     try:
         for f in factors:
             d = f"{scratch}/x{f}"
             build_scaled(spark, base, f, d)
-            for q in QUERIES:
-                qs[q](spark, d).write.format("noop").mode("overwrite").save()  # warm
-                t0 = time.time()
-                qs[q](spark, d).write.format("noop").mode("overwrite").save()
-                results[q][f] = round(time.time() - t0, 3)
+            runs = time_queries(spark, QUERIES, d, warm_dir=d, runs=1)
+            for q, per_run in runs.items():
+                results[q][f] = round(per_run[0][0], 3)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     slopes = {}
