@@ -26,6 +26,14 @@ arithmetic via the SQL ``div`` operator; the DuckDB oracle mirrors it
 with ``//``. Overflow bound: 2*10^k * a must fit int64, i.e.
 a < ~4.6e14 at k=4 and ~4.6e12 at k=6 — document the bound at any call
 site whose numerator can grow with the corpus.
+
+Exactness: within that bound the result is the double nearest the exact
+decimal q * 10^-k, q the integer quotient, on both engines. The final
+step casts the decimal literal string ``q || 'E-' || k`` to DOUBLE, and
+each engine parses such a literal correctly rounded. Casting q to
+DOUBLE and then dividing by 10^k rounds twice once |q| > 2^53: for
+q = -9007199254749999, k = 4 it gives -900719925475.0 where the nearest
+double is -900719925474.9999. For |q| <= 2^53 the two forms are equal.
 """
 
 from __future__ import annotations
@@ -46,13 +54,11 @@ def round_ratio(a_sql: str, b_sql: str, k: int) -> Column:
     # The multiplier literal is written `...L` (BIGINT) so the whole
     # expression evaluates in long arithmetic even when the operands
     # are INT columns or literals — `20000 * <int>` would otherwise
-    # overflow INT32 under ANSI. CAST ... AS DOUBLE before the final
-    # division: a bare `{p}.0` literal parses as DECIMAL in Spark SQL
-    # and the whole expression would come back as Decimal, not the
-    # double the oracle emits.
+    # overflow INT32 under ANSI. The quotient becomes the double by
+    # parsing its decimal string `qE-k` (see the module docstring).
     return F.expr(
-        f"CAST(({2 * p}L * ({a_sql}) + ({b_sql})) div (2 * ({b_sql}))"
-        f" AS DOUBLE) / {p}"
+        f"CAST(CAST(({2 * p}L * ({a_sql}) + ({b_sql})) div (2 * ({b_sql}))"
+        f" AS STRING) || 'E-{k}' AS DOUBLE)"
     )
 
 
@@ -60,6 +66,6 @@ def sql_round_ratio(a_sql: str, b_sql: str, k: int) -> str:
     """The DuckDB twin of :func:`round_ratio` (HUGEINT-exact ``//``)."""
     p = 10 ** k
     return (
-        f"CAST(({2 * p}::BIGINT * ({a_sql}) + ({b_sql})) // (2 * ({b_sql}))"
-        f" AS BIGINT) / {p}.0"
+        f"CAST(CAST(({2 * p}::BIGINT * ({a_sql}) + ({b_sql})) // (2 * ({b_sql}))"
+        f" AS VARCHAR) || 'E-{k}' AS DOUBLE)"
     )

@@ -1272,7 +1272,6 @@ register(
 # (ttr DESC, doc_id ASC) within each component — ttr is the 6-dp-rounded
 # type-token ratio already oracled by doc_quality, so the ranking key is
 # bit-identical across engines.
-@memoized_build("documents")
 def dedup_survivors_best_quality(
     spark: SparkSession,
     sf_dir: str,
@@ -1612,7 +1611,6 @@ _register_components_embedding()
 # connected-components machinery.
 
 
-@memoized_build("embeddings")
 def sim_mutual_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, component) over the mutual-kNN edge set. The kNN edge
     list (N·K rows) comes from the SESSION-MATERIALIZED graph
@@ -1674,7 +1672,6 @@ _register_mutual_knn_clusters()
 
 
 # --- SemDeDup: semantic survivor selection ---------------------------------
-@memoized_build("documents", "embeddings")
 def sim_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the highest-quality doc per mutual-kNN SEMANTIC cluster and
     drop the rest — the SemDeDup pipeline (cluster by embedding
@@ -2076,7 +2073,6 @@ _register_incremental_shard()
 # near-dups every other), triangle-poor chains are drift (A~B~C without
 # A~C — exactly the transitive-merge hazard). One row of telemetry:
 # edges, wedges, triangles, global clustering = 3T / wedges.
-@memoized_build("documents")
 def dedup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed triangle count over the oriented capped-Jaccard edge
     list (doc_a < doc_b by construction, so each triangle a<b<c is

@@ -18,7 +18,6 @@ IVF cells to avoid the O(N²) pair join.
 
 from __future__ import annotations
 
-import functools
 import math
 
 import numpy as np
@@ -2602,24 +2601,25 @@ register(
 # analogue, and the read path a pipeline that has already BUILT the kNN
 # graph (sim_knn_graph) uses to answer new queries without any scan.
 # Every walk query, batch or streaming, is one configuration of the
-# graph_search kernel below: (edge list, seed count, greedy or beam
-# loop, trace or not). Deterministic by construction so it can be
+# graph_search kernel below: (adjacency rows, seed count, greedy or
+# beam, trace or not). Deterministic by construction so it can be
 # value-hash oracled: seeded entry points (the smallest node ids ≠
 # query), cosines quantized to the shared 9-dp contract BEFORE
 # comparison, strictly-improving greedy moves only, ties broken by
 # neighbor id, hop count capped — on both engines the walk is the same
-# unique chain. Spark runs the fixed-cap loop unrolled (the
-# dedup_pagerank precedent) with the small state localCheckpoint'ed per
-# hop; DuckDB runs the genuinely-recursive form (argmax-per-step
-# encoded as NOT EXISTS — a window/aggregate is illegal in a recursive
-# member).
+# unique chain. Spark unrolls the capped hops into ONE lazy plan, each
+# hop a broadcast lookup of the current nodes' adjacency rows and an
+# array argmax (a converged walk's remaining hops are stays); DuckDB
+# runs the genuinely-recursive form (argmax-per-step encoded as NOT
+# EXISTS — a window/aggregate is illegal in a recursive member).
 #
-# Scale shape: the walk never scans the corpus — each hop touches
-# exactly the current nodes' K adjacency rows (an equi-join into the
-# stored edge list) and scores Q·S·K candidates; state is Q·S rows. At
-# 10⁹ vectors the graph is a bucketed table keyed on vec_id and each
-# hop is one co-located lookup join, which is exactly how a
-# disk-based HNSW/DiskANN layer serves.
+# Scale shape: the walk never scans the corpus — each hop reads exactly
+# the current nodes' adjacency rows (the DiskANN/HNSW node record: K
+# out-neighbours next to their vectors, stored once per index) and
+# scores Q·S·K candidates; state is Q·S rows. At 10⁹ vectors the rows
+# are a bucketed table keyed on vec_id and each hop is one co-located
+# lookup join, which is exactly how a disk-based HNSW/DiskANN layer
+# serves.
 
 GRAPH_MAX_HOPS = 8
 
@@ -2634,12 +2634,44 @@ def corpus_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def query_frame(vectors: DataFrame) -> DataFrame:
     """(query_id, qvec, qn) over the valid nonzero rows of an
-    embeddings-shaped frame: the corpus query set (vec_id < N_QUERIES)
-    in batch, each arriving micro-batch in the serving streams."""
+    embeddings-shaped frame: each arriving micro-batch in the serving
+    streams."""
     return vectors.filter(vec_valid() & vec_nonzero()).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
         norm(F.col("embedding")).alias("qn"),
+    )
+
+
+def adjacency_frame(edges: DataFrame, en: DataFrame) -> DataFrame:
+    """(vec_id, nbrs: array<(neighbor_id, embedding, nrm)>): one row per
+    node of the (vec_id, neighbor_id) list `edges` with its
+    out-neighbours' corpus vectors and norms. Neighbours missing from
+    the corpus `en` are dropped; a node without out-edges has no row."""
+    return (
+        edges.join(en.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
+        .select("vec_id", F.struct("neighbor_id", "embedding", "nrm").alias("x"))
+        .groupBy("vec_id")
+        .agg(F.collect_list("x").alias("nbrs"))
+    )
+
+
+def stored_adjacency(spark: SparkSession, sf_dir: str, index) -> DataFrame:
+    """The adjacency rows of the stored edge index `index` (knn_edges or
+    knn_edges_hd), stored once per input stamp beside it: an index,
+    like the edge list itself."""
+    store = {knn_edges: KNN_EDGES_STORE, knn_edges_hd: HD_EDGES_STORE}[index]
+    return persisted_get(
+        f"{store}-adj",
+        spark,
+        sf_dir,
+        "embeddings",
+        "vec_id long, nbrs array<struct<neighbor_id: long,"
+        " embedding: array<float>, nrm: double>>",
+        lambda: adjacency_frame(
+            index(spark, sf_dir).select("vec_id", "neighbor_id"),
+            corpus_frame(spark, sf_dir),
+        ),
     )
 
 
@@ -2649,228 +2681,173 @@ def _cos9(qvec: Column, qn: Column, vec: Column, nrm: Column) -> Column:
     return F.round(dot(qvec, vec) / (qn * nrm), 9)
 
 
-def _seed_frame(queries: DataFrame, en: DataFrame, seeds: int) -> DataFrame:
-    """(query_id, seed, qvec, qn, node, cos, n_hops=0): each query
-    paired with the `seeds` smallest corpus ids that are not the query
-    itself — deterministic, corpus-derived entry points; seed is the
-    entry's 1-based rank. With seeds=1 this is the single-entry rule:
-    the smallest node, unless the query IS that node, then the next."""
-    heads = en.select(F.col("vec_id").alias("node")).orderBy("node").limit(
-        seeds + 1
+def _scored(nbrs: Column, *extra: Column) -> Column:
+    """The (neighbor_id, embedding, nrm) structs `nbrs` without the query
+    itself, each as (c, *extra, nid): c the _cos9 cosine to the query,
+    nid the NEGATED id, so the struct order ranks (cos DESC, id ASC)."""
+    return F.transform(
+        F.filter(nbrs, lambda x: x["neighbor_id"] != F.col("query_id")),
+        lambda x: F.struct(
+            _cos9(F.col("qvec"), F.col("qn"), x["embedding"], x["nrm"]).alias(
+                "c"
+            ),
+            *extra,
+            (-x["neighbor_id"]).alias("nid"),
+        ),
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("node"))
+
+
+def _seed_frame(queries: DataFrame, en: DataFrame, seeds: int) -> DataFrame:
+    """(query_id, qvec, qn, entries): each query with its `seeds` entry
+    points, the smallest corpus ids that are not the query itself, as
+    _scored (c, nid) structs in id order (seed = 1-based position).
+    With seeds=1 this is the single-entry rule: the smallest node,
+    unless the query IS that node, then the next. The queries sit in
+    ONE partition (Q ≪ N): it satisfies every per-query aggregate and
+    window downstream and the callers' final sort without a shuffle."""
+    heads = (
+        en.orderBy("vec_id")
+        .limit(seeds + 1)
+        .select(
+            F.struct(
+                F.col("vec_id").alias("neighbor_id"), "embedding", "nrm"
+            ).alias("x")
+        )
+        .agg(F.array_sort(F.collect_list("x")).alias("heads"))
+    )
     return (
-        queries.join(F.broadcast(heads), F.col("node") != F.col("query_id"))
-        .withColumn("seed", F.row_number().over(w))
-        .filter(F.col("seed") <= seeds)
-        .join(en.alias("n"), F.col("node") == F.col("n.vec_id"))
+        queries.coalesce(1)
+        .crossJoin(F.broadcast(heads))
         .select(
             "query_id",
-            "seed",
             "qvec",
             "qn",
-            "node",
-            _cos9(
-                F.col("qvec"),
-                F.col("qn"),
-                F.col("n.embedding"),
-                F.col("n.nrm"),
-            ).alias("cos"),
-            F.lit(0).alias("n_hops"),
+            F.slice(_scored(F.col("heads")), 1, seeds).alias("entries"),
         )
-        .localCheckpoint()
     )
 
 
-def _walk_loop(
-    state: DataFrame,
-    edges: DataFrame,
-    en: DataFrame,
-    trace: list | None = None,
-) -> DataFrame:
-    """The unrolled greedy descent over a seeded (query_id, seed, qvec,
-    qn, node, cos, n_hops) state frame — each (query_id, seed) pair
-    walks independently, so one seed or many run the IDENTICAL loop with
-    the same per-hop cost shape: one equi-join into the stored
-    adjacency list, Q·S·K candidate scores, Q·S-row state. Pass a
-    `trace` list (seeded with the initial state) to collect the
-    post-hop state frames — the visited set the top-k read ranks."""
+def _greedy_walk(seeded: DataFrame, adj: DataFrame, trace: bool) -> DataFrame:
+    """(query_id, seed, node, cos, n_hops) of every (query_id, seed)
+    walk after GRAPH_MAX_HOPS hops, or with `trace` every state it
+    passed through. A walk's state is one struct w = (c, h, nid), h the
+    NEGATED hop count, and `steps` lists its earlier states (unused
+    without `trace`, so pruned from the plan). A hop keeps the greatest
+    of w and the current node's neighbours one hop further: the argmax
+    neighbour wins iff it strictly improves the cosine (on a tie, w's
+    fewer hops win — the SQL NOT-EXISTS argmax); a converged walk, or a
+    node without an adjacency row, stays."""
+
+    def entry(e: Column, i: Column) -> Column:
+        w = F.struct(
+            e["c"].alias("c"), F.lit(0).alias("h"), e["nid"].alias("nid")
+        )
+        return F.struct(
+            (i + 1).alias("seed"), w.alias("w"), F.array().alias("steps")
+        )
+
+    state = seeded.select(
+        "query_id", "qvec", "qn", F.inline(F.transform("entries", entry))
+    )
+    move = F.array_max(_scored(F.col("nbrs"), (F.col("w.h") - 1).alias("h")))
+    steps = F.concat("steps", F.array("w"))
+    hop = [
+        "query_id",
+        "qvec",
+        "qn",
+        "seed",
+        F.greatest("w", move).alias("w"),
+        steps.alias("steps"),
+    ]
+    lookup, on = F.broadcast(adj), -F.col("w.nid") == F.col("vec_id")
     for _ in range(GRAPH_MAX_HOPS):
-        nbr = (
-            state.alias("s")
-            .join(edges.alias("e"), F.col("s.node") == F.col("e.vec_id"))
-            .filter(F.col("e.neighbor_id") != F.col("s.query_id"))
-            .join(en.alias("n"), F.col("e.neighbor_id") == F.col("n.vec_id"))
-            .withColumn(
-                "ncos",
-                _cos9(
-                    F.col("s.qvec"),
-                    F.col("s.qn"),
-                    F.col("n.embedding"),
-                    F.col("n.nrm"),
-                ),
-            )
-        )
-        w = Window.partitionBy("s.query_id", "s.seed").orderBy(
-            F.desc("ncos"), F.asc("e.neighbor_id")
-        )
-        best_plan = (
-            nbr.withColumn("rn", F.row_number().over(w))
-            # the global argmax improves iff ANY candidate improves, so
-            # rn=1 + strict > is exactly the SQL NOT-EXISTS argmax
-            .filter((F.col("rn") == 1) & (F.col("ncos") > F.col("s.cos")))
-            .select(
-                F.col("s.query_id").alias("query_id"),
-                F.col("s.seed").alias("seed"),
-                F.col("e.neighbor_id").alias("bid"),
-                "ncos",
-            )
-        )
-        # ONE bounded collect per hop (≤ Q·S rows — the centroid-collect
-        # legality class) both tests for convergence and feeds the state
-        # update: the re-created Arrow-backed local relation broadcasts
-        # into it without a shuffle or a Python read path.
-        best_rows = best_plan.collect()
-        if not best_rows:
-            break  # every walk is at its local optimum; stay-steps are no-ops
-        best = F.broadcast(
-            state.sparkSession.createDataFrame(
-                pd.DataFrame(
-                    [(r.query_id, r.seed, r.bid, r.ncos) for r in best_rows],
-                    columns=["query_id", "seed", "bid", "ncos"],
-                ),
-                best_plan.schema,
-            )
-        )
+        state = state.join(lookup, on, "left").select(*hop)
+    if trace:
+        state = state.select("query_id", "seed", F.explode(steps).alias("w"))
+    return state.select(
+        "query_id",
+        "seed",
+        (-F.col("w.nid")).alias("node"),
+        F.col("w.c").alias("cos"),
+        (-F.col("w.h")).alias("n_hops"),
+    )
+
+
+def _beam_walk(seeded: DataFrame, adj: DataFrame, width: int) -> DataFrame:
+    """(query_id, node, cos): the nodes a `width`-wide beam visits in
+    GRAPH_MAX_HOPS hops from each query's entries. Between hops a query
+    is one row per frontier node f (a null f once the frontier is
+    empty), each carrying the (c, nid) array of the nodes visited
+    before. A hop looks up each f's adjacency row, regroups per query
+    in its one aggregate, and explodes the top `width` distinct
+    candidates that are neither the query nor visited; an empty
+    frontier expands to nothing, so later hops are no-ops."""
+    query_id, qvec, qn = map(F.col, ["query_id", "qvec", "qn"])
+    visited = F.concat(F.any_value("visited"), F.collect_list("f"))
+    regroup = [
+        F.any_value("qvec").alias("qvec"),
+        F.any_value("qn").alias("qn"),
+        visited.alias("visited"),
+        F.flatten(F.collect_list("nbrs")).alias("nbrs"),
+    ]
+    fresh = F.filter(
+        _scored(F.col("nbrs")),
+        lambda x: ~F.array_contains(F.col("visited.nid"), x["nid"]),
+    )
+    frontier = F.slice(
+        F.sort_array(F.array_distinct(fresh), asc=False), 1, width
+    )
+    hop = [query_id, qvec, qn, "visited", F.explode_outer(frontier).alias("f")]
+    lookup, on = F.broadcast(adj), -F.col("f.nid") == F.col("vec_id")
+    state = seeded.select(
+        query_id,
+        qvec,
+        qn,
+        F.array().alias("visited"),
+        F.explode_outer("entries").alias("f"),
+    )
+    for _ in range(GRAPH_MAX_HOPS):
         state = (
-            state.alias("s")
-            .join(best.alias("b"), ["query_id", "seed"], "left")
-            .select(
-                "query_id",
-                "seed",
-                "qvec",
-                "qn",
-                F.coalesce(F.col("b.bid"), F.col("s.node")).alias("node"),
-                F.coalesce(F.col("b.ncos"), F.col("s.cos")).alias("cos"),
-                (
-                    F.col("s.n_hops")
-                    + F.when(F.col("b.bid").isNotNull(), 1).otherwise(0)
-                ).alias("n_hops"),
-            )
-            .localCheckpoint()
+            state.join(lookup, on, "left")
+            .groupBy(query_id)
+            .agg(*regroup)
+            .select(*hop)
         )
-        if trace is not None:
-            trace.append(state)
-    return state
-
-
-def _unconstrained(df: DataFrame) -> DataFrame:
-    """`df`'s rows re-wrapped over its own RDD: fresh attributes and no
-    constraints carried over from the plan that produced it. A
-    checkpointed frame keeps its origin plan's constraints, and Spark
-    4.1's Union constraint rewrite fails ("key not found: query_id#N")
-    when the beam unions its visited set with a frontier derived from
-    that same visited set."""
-    jdf = df.sparkSession._jsparkSession.createDataFrame(
-        df._jdf.rdd(), df._jdf.schema()
+    return (
+        state.groupBy(query_id)
+        .agg(F.explode(visited).alias("v"))
+        .select(
+            query_id, (-F.col("v.nid")).alias("node"), F.col("v.c").alias("cos")
+        )
     )
-    return DataFrame(jdf, df.sparkSession)
-
-
-def _beam_loop(
-    frontier: DataFrame,
-    queries: DataFrame,
-    edges: DataFrame,
-    en: DataFrame,
-    width: int,
-) -> DataFrame:
-    """Best-first beam search from a seeded (query_id, node, cos)
-    frontier: per hop, expand every frontier node through the stored
-    adjacency, drop candidates already visited, and keep the per-query
-    top `width` by (cos DESC, node ASC) as the next frontier. An empty
-    frontier ends the search. Returns the visited set (query_id, node,
-    cos)."""
-    visited = frontier
-    for _ in range(GRAPH_MAX_HOPS):
-        cand = (
-            frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.node") == F.col("e.vec_id"))
-            .filter(F.col("e.neighbor_id") != F.col("f.query_id"))
-            .join(
-                F.broadcast(queries).alias("q"),
-                F.col("f.query_id") == F.col("q.query_id"),
-            )
-            .join(en.alias("n"), F.col("e.neighbor_id") == F.col("n.vec_id"))
-            .select(
-                F.col("f.query_id").alias("query_id"),
-                F.col("e.neighbor_id").alias("node"),
-                _cos9(
-                    F.col("q.qvec"),
-                    F.col("q.qn"),
-                    F.col("n.embedding"),
-                    F.col("n.nrm"),
-                ).alias("cos"),
-            )
-            .distinct()
-            .join(
-                visited.select("query_id", "node"),
-                ["query_id", "node"],
-                "left_anti",
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos"), F.asc("node")
-        )
-        frontier = _unconstrained(
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= width)
-            .select("query_id", "node", "cos")
-            .localCheckpoint()
-        )
-        if frontier.isEmpty():
-            break
-        visited = visited.unionByName(frontier).localCheckpoint()
-    return visited
 
 
 def graph_search(
     queries: DataFrame,
-    edges: DataFrame,
+    adj: DataFrame,
     en: DataFrame,
     seeds: int,
     beam: bool = False,
     trace: bool = False,
 ) -> DataFrame:
     """The one graph-search kernel over an arbitrary (query_id, qvec,
-    qn) frame, the stored (vec_id, neighbor_id) `edges` and the corpus
-    `en`: the batch queries and the ingest-time serving streams run the
-    IDENTICAL loops against the same stored edges.
+    qn) frame, the adjacency rows `adj` of a stored edge index and the
+    corpus `en`: the batch queries and the ingest-time serving streams
+    build the IDENTICAL lazy plan, with no driver round trip per hop.
 
     Greedy (default): `seeds` independent walks per query; returns each
     walk's terminal state (query_id, seed, node, cos, n_hops), or with
     `trace` every distinct state it passed through. Beam: one shared
     frontier `seeds` wide, started from the same entries; returns the
     visited set (query_id, node, cos)."""
+    seeded = _seed_frame(queries, en, seeds)
     if beam:
-        # every hop re-reads the query vectors: materialize them once,
-        # before seeding reads them too
-        queries = queries.localCheckpoint()
-    state = _seed_frame(queries, en, seeds)
-    if beam:
-        return _beam_loop(
-            state.select("query_id", "node", "cos"), queries, edges, en, seeds
-        )
-    steps = [state] if trace else None
-    state = _walk_loop(state, edges, en, steps)
-    cols = ["query_id", "seed", "node", "cos", "n_hops"]
-    if not trace:
-        return state.select(*cols)
-    # distinct: a converged walk repeats its terminal row across the
+        return _beam_walk(seeded, adj, seeds)
+    # distinct: a converged walk repeats its terminal state across the
     # unrolled hops (the SQL walk appends only improving steps, so its
     # row set IS this distinct set)
-    return functools.reduce(
-        DataFrame.unionByName, [st.select(*cols) for st in steps]
-    ).distinct()
+    visits = _greedy_walk(seeded, adj, trace)
+    return visits.distinct() if trace else visits
 
 
 def best_visit(visits: DataFrame) -> DataFrame:
@@ -2912,31 +2889,37 @@ def top_visits(visits: DataFrame, k: int) -> DataFrame:
     )
 
 
-def graph_walk_frame(
-    queries: DataFrame, edges: DataFrame, en: DataFrame
-) -> DataFrame:
+def walk_best(queries: DataFrame, adj: DataFrame, en: DataFrame) -> DataFrame:
     """(query_id, best_id, cos_graph, n_hops): the single-entry greedy
     walk's terminal state over an arbitrary query frame — sim_ann_graph's
     configuration, run per micro-batch by
     streaming.pipeline.graph_search_stream."""
-    return best_visit(graph_search(queries, edges, en, 1)).drop("seed")
+    return best_visit(graph_search(queries, adj, en, 1)).drop("seed")
+
+
+def graph_walk_frame(
+    queries: DataFrame, edges: DataFrame, en: DataFrame
+) -> DataFrame:
+    """walk_best over an arbitrary (vec_id, neighbor_id) edge list, such
+    as one published version of a maintained index."""
+    return walk_best(queries, adjacency_frame(edges, en), en)
 
 
 def _corpus_walk_inputs(
     spark: SparkSession, sf_dir: str, index
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(queries, edges, en) of a registered walk: the corpus query set
-    (vec_id < N_QUERIES), the (vec_id, neighbor_id) list of the stored
-    edge index `index` builds, and the corpus — graph_search's first
-    three arguments. Every walk query and recall twin searches afresh
-    on each call; only the edge index is stored."""
-    queries = query_frame(
-        load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") < N_QUERIES
-        )
+    """(queries, adj, en) of a registered walk: the corpus query set
+    (vec_id < N_QUERIES), the stored adjacency rows of the edge index
+    `index`, and the corpus — graph_search's first three arguments.
+    Every walk query and recall twin searches afresh on each call; only
+    the indexes are stored."""
+    en = corpus_frame(spark, sf_dir)
+    queries = en.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.col("nrm").alias("qn"),
     )
-    edges = index(spark, sf_dir).select("vec_id", "neighbor_id")
-    return queries, edges, corpus_frame(spark, sf_dir)
+    return queries, stored_adjacency(spark, sf_dir, index), en
 
 
 def _recall_at_1(
@@ -2976,7 +2959,7 @@ def sim_ann_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     local optimum each query reaches on the kNN graph, with the hop
     count it took. Walks the stored edge index (knn_edges) afresh on
     every call."""
-    return graph_walk_frame(
+    return walk_best(
         *_corpus_walk_inputs(spark, sf_dir, knn_edges)
     ).orderBy("query_id")
 
@@ -3109,7 +3092,7 @@ def sim_ann_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_at_1(
         spark,
         sf_dir,
-        graph_walk_frame(*_corpus_walk_inputs(spark, sf_dir, knn_edges)),
+        walk_best(*_corpus_walk_inputs(spark, sf_dir, knn_edges)),
     )
 
 
@@ -3256,8 +3239,9 @@ register(
 # WWW'11). The chosen configuration reaches recall@1 = 18/20 (0.90) at
 # sf0.1 and 20/20 at sf0.01 with avg cos_gap ≤ 0.002 — the ≥0.9 bar —
 # and every stage is a bucketed/bounded DataFrame op: the walk itself
-# is unchanged (_walk_loop), only the stored graph is denser and the
-# seed fan wider (DiskANN/HNSW practice: serving degree 32-64).
+# is unchanged (graph_search over the graph's adjacency rows), only the
+# stored graph is denser and the seed fan wider (DiskANN/HNSW practice:
+# serving degree 32-64).
 #
 # Scale shape of the build: seed graph = the IVF kNN build at K=32
 # (N·√N assign + in-cell refine, one shuffle on cell_id); the NND round

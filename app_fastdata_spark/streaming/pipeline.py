@@ -858,40 +858,43 @@ def graph_search_stream(
     available_now: bool = True,
 ):
     """ANN serving at ingest over the PREBUILT kNN graph: each arriving
-    vector greedily descends the session-materialized edge list
-    (similarity.knn_edges — built offline, stored; the ST7 hot-model
-    lifecycle applied to a graph index) and its local optimum is
-    appended to the sink. The walk is per-hop iterative, which no
-    stream-static join chain can express, so each micro-batch runs the
-    IDENTICAL batch walk via foreachBatch (the start_enriched_swap
-    precedent) — batch/stream parity is the same function by
-    construction, pinned by test anyway. Stateless across batches: the
-    graph is static, a query's answer depends only on its own vector.
-    Rebuilding the graph = new knn_edges stamp (a model swap), and the
-    swap takes effect on the NEXT micro-batch: graph resolution happens
-    inside the batch callback, gated by a per-batch stamp check (a
-    driver-side stat, no Spark job), so a long-running stream picks up
-    a rebuilt index without a query restart (r11 ADVICE).
+    vector greedily descends the stored adjacency rows of the kNN edge
+    list (similarity.knn_edges — built offline, stored; the ST7
+    hot-model lifecycle applied to a graph index) and its local optimum
+    is appended to the sink. Each micro-batch runs sim_ann_graph's
+    configuration of the one graph-search kernel via foreachBatch (the
+    start_enriched_swap precedent): the same lazy plan as the batch
+    query, so batch/stream parity holds by construction, pinned by test
+    anyway. Stateless across batches: the graph is static, a query's
+    answer depends only on its own vector. Rebuilding the graph = new
+    knn_edges stamp (a model swap), and the swap takes effect on the
+    NEXT micro-batch: graph resolution happens inside the batch
+    callback, gated by a per-batch stamp check (a driver-side stat, no
+    Spark job), so a long-running stream picks up a rebuilt index
+    without a query restart (r11 ADVICE).
 
     `edges_path` points the serving stream at an explicit stored edge
     list — a versioned index root maintained by `graph_insert_stream`
     (resolved through its atomic LATEST pointer) or a flat parquet dir
-    written once — instead of the corpus-stamp-keyed knn_edges; the
-    per-batch re-resolve then makes each MAINTENANCE publish visible to
-    the next serving batch, closing the build → store → maintain →
-    serve loop. A batch that arrives BEFORE the first publish FAILS
-    loudly (RuntimeError) instead of silently consuming its queries —
-    the foreachBatch epoch would otherwise commit and the queries would
+    written once — instead of the corpus-stamp-keyed knn_edges; its
+    adjacency rows are built once per resolved version. The per-batch
+    re-resolve then makes each MAINTENANCE publish visible to the next
+    serving batch, closing the build → store → maintain → serve loop. A
+    batch that arrives BEFORE the first publish FAILS loudly
+    (RuntimeError) instead of silently consuming its queries — the
+    foreachBatch epoch would otherwise commit and the queries would
     never be answered (r12 ADVICE); sequence serving after the first
     publish, or restart the stream once the index exists. After a
     successful resolve, an incomplete/unpublished probe keeps serving
     the previously resolved version (retained by the publisher's
     version-keep window) and re-probes next batch."""
     from ..operators.similarity import (
+        adjacency_frame,
         corpus_frame,
-        graph_walk_frame,
         knn_edges,
         query_frame,
+        stored_adjacency,
+        walk_best,
     )
     from ..tables import file_stamp
 
@@ -917,30 +920,29 @@ def graph_search_stream(
         model["en"] = corpus_frame(spark, sf_dir)
         model["nodes"] = model["en"].limit(2).count()
         if vdir is not None:
-            model["edges"] = spark.read.schema(
+            edges = spark.read.schema(
                 "vec_id long, rank int, neighbor_id long, cos double"
             ).parquet(vdir).select("vec_id", "neighbor_id")
+            model["adj"] = adjacency_frame(edges, model["en"]).localCheckpoint()
         else:
-            model["edges"] = knn_edges(spark, sf_dir).select(
-                "vec_id", "neighbor_id"
-            )
+            model["adj"] = stored_adjacency(spark, sf_dir, knn_edges)
         model["stamp"] = stamp
 
     def _walk_batch(batch: DataFrame, _epoch: int) -> None:
         # Retry once on a vanished pinned version: a maintenance stream
         # that published more than INDEX_KEEP_VERSIONS times inside ONE
-        # serving batch prunes the version this batch pinned at
-        # _resolve time; the scan then fails mid-walk. Re-resolving
-        # picks up the current complete version and the walk re-runs —
-        # the append sink has not been written yet, so the retry is
-        # exactly-once per batch.
+        # serving batch prunes the version this batch pinned before its
+        # adjacency rows were built; that build then fails mid-scan.
+        # Re-resolving picks up the current complete version and the
+        # walk re-runs — the append sink has not been written yet, so
+        # the retry is exactly-once per batch.
         for attempt in (0, 1):
-            _resolve()
-            if model["nodes"] < 2:
-                return  # <2 graph nodes: no walk (batch-twin contract)
             try:
-                graph_walk_frame(
-                    query_frame(batch), model["edges"], model["en"]
+                _resolve()
+                if model["nodes"] < 2:
+                    return  # <2 graph nodes: no walk (batch-twin contract)
+                walk_best(
+                    query_frame(batch), model["adj"], model["en"]
                 ).write.mode("append").parquet(output_path)
                 return
             except Exception:
@@ -968,11 +970,11 @@ def beam_search_stream(
     """The DEPLOYABLE serving configuration at ingest: each arriving
     vector batch runs sim_ann_graph_beam's configuration of the one
     graph-search kernel (similarity.graph_search — W-wide shared
-    frontier over the stored high-degree NN-descent graph, recall@1
-    1.00 at sf0.1) and appends its BEAM_TOPK ranked answers to the
-    sink. Same lifecycle as graph_search_stream (stateless across
-    batches, static stored graph, per-batch edge re-resolution through
-    the session cache's stamp key)."""
+    frontier over the stored adjacency rows of the high-degree
+    NN-descent graph, recall@1 1.00 at sf0.1) and appends its BEAM_TOPK
+    ranked answers to the sink. Same lifecycle as graph_search_stream
+    (stateless across batches, static stored graph, per-batch
+    adjacency re-resolution through the session cache's stamp key)."""
     from ..operators.similarity import (
         BEAM_TOPK,
         BEAM_WIDTH,
@@ -980,14 +982,14 @@ def beam_search_stream(
         graph_search,
         knn_edges_hd,
         query_frame,
+        stored_adjacency,
         top_visits,
     )
 
     def _beam_batch(batch: DataFrame, _epoch: int) -> None:
-        edges = knn_edges_hd(spark, sf_dir).select("vec_id", "neighbor_id")
         visited = graph_search(
             query_frame(batch),
-            edges,
+            stored_adjacency(spark, sf_dir, knn_edges_hd),
             corpus_frame(spark, sf_dir),
             BEAM_WIDTH,
             beam=True,

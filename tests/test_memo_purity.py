@@ -11,9 +11,9 @@ result-shadowing the r13 verdict flagged.
 This test pins the invariant at the same seam the r14 audit used: for
 every memoized headline builder, a steady-state build of the UNDECORATED
 function (session artifacts pre-warmed, so this measures what the memo
-replaces on a warm run) must trigger ZERO Spark jobs. The four r13-era
-builders whose eager dim-sized literal collects are documented and
-visible in the cold totals are the frozen allowlist; nothing may be
+replaces on a warm run) must trigger ZERO Spark jobs. The r13-era
+builder whose eager dim-sized literal collects are documented and
+visible in the cold totals is the frozen allowlist; nothing may be
 added to it without the same documentation trail.
 """
 
@@ -24,17 +24,12 @@ import pytest
 from app_fastdata_spark.catalog import queries
 from bench import HEADLINE
 
-# r13-era memoized builders that run eager dim-sized literal jobs at
-# every build (collected percentile/centroid maps inlined as literals).
-# Their build cost IS visible in the bench's cold totals; the memo
-# amortizes it on the warm path by design, documented in
-# OPTIMIZATION_r13.md / OPTIMIZATION_r14.md.
-EAGER_BUILD_ALLOWLIST = {
-    "dedup_survivors_best_quality",
-    "dedup_graph_stats",
-    "events_value_mad",
-    "sim_mutual_knn_clusters",
-}
+# The one memoized builder that still runs eager dim-sized literal jobs
+# at every build (collected percentile maps inlined as literals). Its
+# build cost IS visible in the bench's cold totals; the memo amortizes
+# it on the warm path by design, documented in OPTIMIZATION_r13.md /
+# OPTIMIZATION_r14.md.
+EAGER_BUILD_ALLOWLIST = {"events_value_mad"}
 
 
 @pytest.mark.slow

@@ -2581,6 +2581,100 @@ def test_beam_search_structure_bounds_and_recall(spark, sf_dir):
     assert hits >= 0.9 * len(by_q), f"beam recall@1 {hits}/{len(by_q)}"
 
 
+def test_graph_search_dead_end_and_missing_rows_hand_graph(spark):
+    """A hand-built 2-D graph with every corner of the kernel: query 100
+    walks 1 -> 2 -> 3 -> 4 and stops at node 4, which has no out-edges
+    (no adjacency row), although node 5 is closer; edge 2 -> 100 points
+    at the query itself and edge 3 -> 99 at a node missing from the
+    corpus; query 101 converges at its entry. Greedy (one and two
+    seeds), trace and a width-2 beam must return exactly these rows (the
+    rows the earlier per-hop driver loop returned)."""
+    import math
+
+    from app_fastdata_spark.operators import similarity as S
+
+    angle = {1: 80, 2: 60, 3: 40, 4: 20, 5: 10, 6: 70, 100: 0, 101: 90}
+    en = spark.createDataFrame(
+        [
+            (v, [math.cos(math.radians(a)), math.sin(math.radians(a))])
+            for v, a in angle.items()
+        ],
+        "vec_id long, embedding array<float>",
+    ).select("vec_id", "embedding", S.norm(F.col("embedding")).alias("nrm"))
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 6), (2, 3), (2, 100), (3, 4), (3, 2), (3, 99), (6, 5),
+         (5, 1)],
+        "vec_id long, neighbor_id long",
+    )
+    queries = en.filter("vec_id >= 100").select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.col("nrm").alias("qn"),
+    )
+    adj = S.adjacency_frame(edges, en)
+
+    def search(seeds, **kw):
+        rows = S.graph_search(queries, adj, en, seeds, **kw).collect()
+        return sorted(tuple(r) for r in rows)
+
+    assert search(1) == [
+        (100, 1, 4, 0.939692617, 3),
+        (101, 1, 1, 0.984807752, 0),
+    ]
+    assert search(2) == [
+        (100, 1, 4, 0.939692617, 3),
+        (100, 2, 4, 0.939692617, 2),
+        (101, 1, 1, 0.984807752, 0),
+        (101, 2, 2, 0.8660254, 0),
+    ]
+    assert search(1, trace=True) == [
+        (100, 1, 1, 0.173648183, 0),
+        (100, 1, 2, 0.500000007, 1),
+        (100, 1, 3, 0.766044428, 2),
+        (100, 1, 4, 0.939692617, 3),
+        (101, 1, 1, 0.984807752, 0),
+    ]
+    assert search(2, beam=True) == [
+        (100, 1, 0.173648183),
+        (100, 2, 0.500000007),
+        (100, 3, 0.766044428),
+        (100, 4, 0.939692617),
+        (100, 5, 0.984807752),
+        (100, 6, 0.342020154),
+        (101, 1, 0.984807752),
+        (101, 2, 0.8660254),
+        (101, 3, 0.642787627),
+        (101, 4, 0.342020154),
+        (101, 5, 0.173648183),
+        (101, 6, 0.939692617),
+    ]
+
+
+def test_graph_walk_is_a_few_jobs(spark, sf_dir):
+    """A warm walk call is one lazy plan: the adjacency-row broadcast,
+    the seed-head broadcast and the result job, with no job per hop
+    (no collect, checkpoint, convergence probe or union)."""
+    from app_fastdata_spark.catalog import queries
+
+    sc = spark.sparkContext
+
+    def jobs(name):
+        q = queries()[name]
+        q(spark, sf_dir).collect()  # warm: the stored indexes exist
+        group = f"walk-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            q(spark, sf_dir).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("sim_ann_graph") <= 4
+    assert jobs("sim_ann_graph_beam") <= 4
+
+
 # Registered queries, each with the kernel that computes its answer (for
 # the ANN recall twins, their exact baseline). A store holds an index or
 # model, never a query's result, so every call runs the kernel again.

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -467,6 +467,9 @@ def test_shingle_tokenizer_cross_engine_fuzz(texts):
     ),
     k=st.integers(0, 6),
 )
+# |a·10^k/b| past 2^53: the quotient must not round twice on its way to
+# the double
+@example(pairs=[(-900719925475, 1)], k=4)
 @settings(**SETTINGS)
 def test_round_ratio_cross_engine_fuzz(spark, pairs, k):
     """The house integer-rounding identity (functions/rounding.py) that
