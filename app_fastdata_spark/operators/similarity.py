@@ -27,7 +27,9 @@ from pyspark.sql import functions as F
 
 from ..cache import memoized_build, persisted_get, session_get, stamp_key
 from ..registry import register
-from ..tables import load_table, parquet_num_rows, widen_small_scan
+from ..tables import (
+    load_table, narrow_single_split_scan, parquet_num_rows, widen_small_scan
+)
 
 DIM = 64
 N_QUERIES = 20          # vec_id < 20 are the query set
@@ -2608,20 +2610,23 @@ register(
 # comparison, strictly-improving greedy moves only, ties broken by
 # neighbor id, hop count capped — on both engines the walk is the same
 # unique chain. Spark unrolls the capped hops into ONE lazy plan, each
-# hop a broadcast lookup of the current nodes' adjacency rows and an
+# hop a lookup join of the current nodes' adjacency rows and an
 # array argmax (a converged walk's remaining hops are stays); DuckDB
 # runs the genuinely-recursive form (argmax-per-step encoded as NOT
 # EXISTS — a window/aggregate is illegal in a recursive member).
 #
-# Scale shape: the walk never scans the corpus — each hop reads exactly
-# the current nodes' adjacency rows (the DiskANN/HNSW node record: K
+# Scale shape: the walk never scans the corpus — each hop joins the Q·S
+# state rows to the adjacency rows (the DiskANN/HNSW node record: K
 # out-neighbours next to their vectors, stored once per index) and
-# scores Q·S·K candidates; state is Q·S rows. At 10⁹ vectors the rows
-# are a bucketed table keyed on vec_id and each hop is one co-located
-# lookup join, which is exactly how a disk-based HNSW/DiskANN layer
-# serves.
+# scores Q·S·K candidates. The rows grow with the corpus, so they are
+# broadcast (one copy for every hop) only while a footer bound keeps
+# them under ADJ_BROADCAST_MAX_ENTRIES vectors; past it AQE plans each
+# hop join, at worst a shuffle join whose adjacency exchange all hops
+# share, gone once the rows are a table bucketed on vec_id.
 
 GRAPH_MAX_HOPS = 8
+# a few hundred MB framed: tables.BROADCAST_MAX_ROWS's forced-broadcast ceiling
+ADJ_BROADCAST_MAX_ENTRIES = 1 << 20
 
 
 def corpus_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2656,12 +2661,25 @@ def adjacency_frame(edges: DataFrame, en: DataFrame) -> DataFrame:
     )
 
 
+def broadcast_adjacency(adj: DataFrame, entries: int | None) -> DataFrame:
+    """``F.broadcast(adj)`` when `entries`, a bound on the neighbour
+    vectors in `adj`, is known and under ADJ_BROADCAST_MAX_ENTRIES."""
+    if entries is not None and entries < ADJ_BROADCAST_MAX_ENTRIES:
+        return F.broadcast(adj)
+    return adj
+
+
 def stored_adjacency(spark: SparkSession, sf_dir: str, index) -> DataFrame:
     """The adjacency rows of the stored edge index `index` (knn_edges or
     knn_edges_hd), stored once per input stamp beside it: an index,
-    like the edge list itself."""
-    store = {knn_edges: KNN_EDGES_STORE, knn_edges_hd: HD_EDGES_STORE}[index]
-    return persisted_get(
+    like the edge list itself. Broadcast-hinted while the corpus footer
+    row count times the index degree is under the gate."""
+    store, degree = {
+        knn_edges: (KNN_EDGES_STORE, KNN_K),
+        knn_edges_hd: (HD_EDGES_STORE, HD_KNN_K),
+    }[index]
+    nodes = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
+    adj = persisted_get(
         f"{store}-adj",
         spark,
         sf_dir,
@@ -2673,6 +2691,7 @@ def stored_adjacency(spark: SparkSession, sf_dir: str, index) -> DataFrame:
             corpus_frame(spark, sf_dir),
         ),
     )
+    return broadcast_adjacency(adj, None if nodes is None else nodes * degree)
 
 
 def _cos9(qvec: Column, qn: Column, vec: Column, nrm: Column) -> Column:
@@ -2702,9 +2721,9 @@ def _seed_frame(queries: DataFrame, en: DataFrame, seeds: int) -> DataFrame:
     points, the smallest corpus ids that are not the query itself, as
     _scored (c, nid) structs in id order (seed = 1-based position).
     With seeds=1 this is the single-entry rule: the smallest node,
-    unless the query IS that node, then the next. The queries sit in
-    ONE partition (Q ≪ N): it satisfies every per-query aggregate and
-    window downstream and the callers' final sort without a shuffle."""
+    unless the query IS that node, then the next. The hops keep the
+    queries' partitioning: one hash on query_id serves every per-query
+    aggregate and window after them."""
     heads = (
         en.orderBy("vec_id")
         .limit(seeds + 1)
@@ -2715,15 +2734,9 @@ def _seed_frame(queries: DataFrame, en: DataFrame, seeds: int) -> DataFrame:
         )
         .agg(F.array_sort(F.collect_list("x")).alias("heads"))
     )
-    return (
-        queries.coalesce(1)
-        .crossJoin(F.broadcast(heads))
-        .select(
-            "query_id",
-            "qvec",
-            "qn",
-            F.slice(_scored(F.col("heads")), 1, seeds).alias("entries"),
-        )
+    entries = F.slice(_scored(F.col("heads")), 1, seeds).alias("entries")
+    return queries.crossJoin(F.broadcast(heads)).select(
+        "query_id", "qvec", "qn", entries
     )
 
 
@@ -2750,18 +2763,11 @@ def _greedy_walk(seeded: DataFrame, adj: DataFrame, trace: bool) -> DataFrame:
         "query_id", "qvec", "qn", F.inline(F.transform("entries", entry))
     )
     move = F.array_max(_scored(F.col("nbrs"), (F.col("w.h") - 1).alias("h")))
-    steps = F.concat("steps", F.array("w"))
-    hop = [
-        "query_id",
-        "qvec",
-        "qn",
-        "seed",
-        F.greatest("w", move).alias("w"),
-        steps.alias("steps"),
-    ]
-    lookup, on = F.broadcast(adj), -F.col("w.nid") == F.col("vec_id")
+    w, steps = F.greatest("w", move), F.concat("steps", F.array("w"))
+    hop = ["query_id", "qvec", "qn", "seed", w.alias("w"), steps.alias("steps")]
+    on = -F.col("w.nid") == F.col("vec_id")
     for _ in range(GRAPH_MAX_HOPS):
-        state = state.join(lookup, on, "left").select(*hop)
+        state = state.join(adj, on, "left").select(*hop)
     if trace:
         state = state.select("query_id", "seed", F.explode(steps).alias("w"))
     return state.select(
@@ -2798,17 +2804,12 @@ def _beam_walk(seeded: DataFrame, adj: DataFrame, width: int) -> DataFrame:
         F.sort_array(F.array_distinct(fresh), asc=False), 1, width
     )
     hop = [query_id, qvec, qn, "visited", F.explode_outer(frontier).alias("f")]
-    lookup, on = F.broadcast(adj), -F.col("f.nid") == F.col("vec_id")
-    state = seeded.select(
-        query_id,
-        qvec,
-        qn,
-        F.array().alias("visited"),
-        F.explode_outer("entries").alias("f"),
-    )
+    on = -F.col("f.nid") == F.col("vec_id")
+    start = [F.array().alias("visited"), F.explode_outer("entries").alias("f")]
+    state = seeded.select(query_id, qvec, qn, *start)
     for _ in range(GRAPH_MAX_HOPS):
         state = (
-            state.join(lookup, on, "left")
+            state.join(adj, on, "left")
             .groupBy(query_id)
             .agg(*regroup)
             .select(*hop)
@@ -2897,9 +2898,7 @@ def walk_best(queries: DataFrame, adj: DataFrame, en: DataFrame) -> DataFrame:
     return best_visit(graph_search(queries, adj, en, 1)).drop("seed")
 
 
-def graph_walk_frame(
-    queries: DataFrame, edges: DataFrame, en: DataFrame
-) -> DataFrame:
+def graph_walk_frame(queries: DataFrame, edges: DataFrame, en: DataFrame) -> DataFrame:
     """walk_best over an arbitrary (vec_id, neighbor_id) edge list, such
     as one published version of a maintained index."""
     return walk_best(queries, adjacency_frame(edges, en), en)
@@ -2912,12 +2911,12 @@ def _corpus_walk_inputs(
     (vec_id < N_QUERIES), the stored adjacency rows of the edge index
     `index`, and the corpus — graph_search's first three arguments.
     Every walk query and recall twin searches afresh on each call; only
-    the indexes are stored."""
+    the indexes are stored. On a one-split corpus the query set needs
+    no shuffle at all."""
     en = corpus_frame(spark, sf_dir)
-    queries = en.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("nrm").alias("qn"),
+    queries = narrow_single_split_scan(
+        en.filter(F.col("vec_id") < N_QUERIES).toDF("query_id", "qvec", "qn"),
+        f"{sf_dir}/embeddings.parquet",
     )
     return queries, stored_adjacency(spark, sf_dir, index), en
 

@@ -890,13 +890,14 @@ def graph_search_stream(
     version-keep window) and re-probes next batch."""
     from ..operators.similarity import (
         adjacency_frame,
+        broadcast_adjacency,
         corpus_frame,
         knn_edges,
         query_frame,
         stored_adjacency,
         walk_best,
     )
-    from ..tables import file_stamp
+    from ..tables import file_stamp, parquet_num_rows
 
     model: dict = {"stamp": None}
 
@@ -923,7 +924,9 @@ def graph_search_stream(
             edges = spark.read.schema(
                 "vec_id long, rank int, neighbor_id long, cos double"
             ).parquet(vdir).select("vec_id", "neighbor_id")
-            model["adj"] = adjacency_frame(edges, model["en"]).localCheckpoint()
+            adj = adjacency_frame(edges, model["en"]).localCheckpoint()
+            # one neighbour vector per stored edge
+            model["adj"] = broadcast_adjacency(adj, parquet_num_rows(vdir))
         else:
             model["adj"] = stored_adjacency(spark, sf_dir, knn_edges)
         model["stamp"] = stamp

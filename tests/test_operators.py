@@ -2675,6 +2675,33 @@ def test_graph_walk_is_a_few_jobs(spark, sf_dir):
     assert jobs("sim_ann_graph_beam") <= 4
 
 
+def test_graph_walk_without_adjacency_broadcast(spark, sf_dir, monkeypatch):
+    """Past ADJ_BROADCAST_MAX_ENTRIES the adjacency rows carry no
+    broadcast hint. With automatic broadcasts off too, every hop is a
+    shuffle join whose adjacency side is ONE exchange shared by all
+    hops, and greedy and beam walks return the same rows."""
+    from app_fastdata_spark.operators import similarity as S
+
+    names = ("sim_ann_graph", "sim_ann_graph_beam")
+    hinted = {n: sorted(map(tuple, getattr(S, n)(spark, sf_dir).collect()))
+              for n in names}
+    monkeypatch.setattr(S, "ADJ_BROADCAST_MAX_ENTRIES", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for n in names:
+            df = getattr(S, n)(spark, sf_dir)
+            assert sorted(map(tuple, df.collect())) == hinted[n]
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in plan
+            final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+            assert final.count("SortMergeJoin") == S.GRAPH_MAX_HOPS
+            assert final.count("ReusedExchange") == S.GRAPH_MAX_HOPS - 1
+    finally:
+        spark.conf.set(key, old)
+
+
 # Registered queries, each with the kernel that computes its answer (for
 # the ANN recall twins, their exact baseline). A store holds an index or
 # model, never a query's result, so every call runs the kernel again.
